@@ -22,32 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from biz_crawlers_spark import queries as Q  # noqa: E402
-from biz_crawlers_spark.ml import dedup as D  # noqa: E402
-from biz_crawlers_spark.ml import similarity as S  # noqa: E402
-from biz_crawlers_spark.ml import textstats as TX  # noqa: E402
+from bench import BENCH_QUERIES, WARMUP_SF_DIR  # noqa: E402
 
-QUERIES = {
-    "q1": ("q1_pricing_summary", Q.flagship_pricing_summary),
-    "q2": ("q2_join_revenue", Q.q_join_revenue_per_nation),
-    "q3": ("q3_latest_pick", Q.r6_latest_pick),
-    "q4": ("q4_running_window", Q.w1_running_sum),
-    "q5": ("q5_events_tumbling", Q.events_tumbling_window),
-    "q6": ("q6_merge_overlay", Q.r8_merge_overlay),
-    "q7": ("q7_token_stats", TX.token_stats),
-    "q8": ("q8_quality_score", TX.quality_score),
-    "q9": ("q9_dedup_exact", D.dedup_exact),
-    "q10": ("q10_dedup_minhash_lsh", D.dedup_minhash_lsh),
-    "q11": ("q11_ann_bruteforce", S.ann_bruteforce),
-    "q13": (
-        "q13_dedup_jaccard_t07_quarter",
-        lambda sp, sf: D.dedup_ngram_jaccard(sp, sf, threshold=0.7, sample_mod=4),
-    ),
-    "q14": ("q14_dedup_simhash", D.dedup_simhash),
-    "q16": ("q16_report_ids", Q.x1_report_ids),
-}
-
-WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
+# short CLI names (q13 ...) are the labels' prefixes in bench.py's table
+QUERIES = {label.split("_", 1)[0]: (label, fn) for label, fn in BENCH_QUERIES.items()}
 
 
 def main() -> None:

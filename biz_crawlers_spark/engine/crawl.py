@@ -10,10 +10,12 @@ git-commit durability, crawl-details.php:245-291):
   3. dedup: batch dropDuplicates (D1) → Bloom prefilter (no false negatives)
      → exact anti-join against the seen table on Bloom-positives only (D2);
      TTL mode (D7) keeps only in-window keys as duplicates
-  4. D9 routing: archived keys split off to a parse-only lane (no fetch)
+  4. D9 routing (archive mode): one left join attaches the archived body to
+     every batch row whose key has an ``ok`` page (search pages excepted)
   5. fetch+extract: repartition BY HOST → fused mapInPandas stage
-     (politeness + ordering live there — engine/stage.py) unioned with the
-     parse-only lane → ONE staging write
+     (politeness + ordering live there — engine/stage.py); rows carrying an
+     archived body are re-parsed in the same stage instead of fetched →
+     ONE staging write
   6. commits: images MERGE, records MERGE, pages MERGE, seen append + Bloom
      (+cuckoo mirror) add, fused frontier MERGE (state transitions +
      dedup-done + discovered inserts), order_log append, lineage append —
@@ -42,9 +44,10 @@ must be O(batch), never O(accumulated tables), or a long campaign decays):
   MoR append. The whole-table copy-on-write rewrite never happens, and the
   MoR read tax is folded by the vacuum compaction cadence
 - the order log derives from the sequence the fetch stage itself emits
-  (rows arrive sorted per range-contiguous lane) + per-(partition, host)
-  offsets from the stats pass — a narrow scan and an append, no extra
-  shuffle
+  (rows arrive sorted per range-contiguous lane; cached D9 rows are
+  numbered in place like fetched ones) + per-(partition, host) offsets
+  from the stats pass — a narrow scan and an append, no extra shuffle, in
+  every mode
 - the Bloom filter tracks per-shard fill in version metadata and rebuilds
   itself into a larger bit space from the seen table when saturation would
   degrade the D2 prefilter (filters/bloom.py saturation policy)
@@ -62,7 +65,6 @@ from pyspark.storagelevel import StorageLevel
 from biz_crawlers_spark.engine.budget import select_per_host_topk
 from biz_crawlers_spark.engine.stage import (
     STAGE_DDL,
-    make_parse_stage,
     make_robots_stage,
     make_stage,
 )
@@ -107,10 +109,7 @@ class CrawlEngine:
         ttl_epochs: int | None = None,
         archive_pages: bool = False,
         robots_ttl_epochs: int | None = None,
-        ranking_window_rows: int = 100_000,
         bloom_rebuild_fill: float = 0.5,
-        payload_key_gate: str = "bloom",
-        payload_patch: bool = True,
     ):
         """``fetch_salting``: 0 (default, strict mode) partitions the fetch
         stage by host only — per-host politeness pacing is globally correct,
@@ -120,8 +119,7 @@ class CrawlEngine:
         additionally salts by pmod(url_key, S): the 80%-one-host skew spreads
         over S lanes so CPU scaling measures the engine, not one task. Crawl
         ORDER is unaffected either way — it is defined by the deterministic
-        sort key and derived by window, not by worker arrival (see
-        run_epoch's order_log)."""
+        sort key, not by worker arrival (see run_epoch's order_log)."""
         self.spark = spark
         self.workdir = workdir.rstrip("/")
         self.web_params = web_params or {}
@@ -139,16 +137,11 @@ class CrawlEngine:
         # re-crawl regardless — the reference's delete-corrupted-JSON branch.
         self.ttl_epochs = ttl_epochs
         # D9/K5: archive raw page bodies in the pages table; frontier rows
-        # whose key is archived route to a parse-only stage (no fetch)
+        # whose key is archived are re-parsed by the fetch stage (no fetch)
         self.archive_pages = archive_pages
         # P8: robots rules older than this many epochs re-fetch (None = once
         # per host, ever — the robots SnapTable is the durable cache)
         self.robots_ttl_epochs = robots_ttl_epochs
-        # order-log ranking switches from one plain window to the two-phase
-        # skew-free computation above this batch size (VERDICT r3 #1a: below
-        # ~10^5 rows one sort task is cheaper than range sampling + counts +
-        # a mapInPandas pass; the fixed job count dominates small epochs)
-        self.ranking_window_rows = ranking_window_rows
         # D2 at 10^10 keys: max shard fill above this triggers a Bloom
         # rebuild into a larger bit space at epoch commit (filters/bloom.py
         # saturation policy); 0.5 keeps FPR ≈ 0.5^k ≈ 0.8% worst-case
@@ -215,17 +208,8 @@ class CrawlEngine:
         # commit member (and Blooms have no false negatives); keys from
         # rolled-back epochs linger as harmless extra positives. String keys
         # probe via xxhash64 — a 64-bit hash collision is just another
-        # conservative positive. ``payload_key_gate="scan"`` keeps the
-        # exact raw-key-scan gate (equivalence-tested).
-        if payload_key_gate not in ("bloom", "scan"):
-            raise ValueError(f"payload_key_gate must be 'bloom' or 'scan', got {payload_key_gate!r}")
-        self.payload_key_gate = payload_key_gate
-        # ``payload_patch``: a batch with a handful of in-batch duplicate
-        # keys still takes the zero-copy adopt — the duplicated keys' rows
-        # (alone) are re-written as a tiny merge-on-read PATCH commit whose
-        # higher-seq equality-delete entry supersedes the adopted copies.
-        # False restores the full-batch MoR fallback (A/B attribution).
-        self.payload_patch = payload_patch
+        # conservative positive. The exact raw-key scan is the test-side
+        # reference (tests/test_round5_ops.py).
         self._payload_keyblooms: dict[str, BloomShards] = {}
         for part, table, key in (
             ("image", self.images, "image_id"),
@@ -238,7 +222,7 @@ class CrawlEngine:
                 kb = BloomShards.create(
                     kp, n_shards=bloom_shards, m_bits=bloom_bits, k=bloom_k
                 )
-                if payload_key_gate == "bloom" and not table.is_empty():
+                if not table.is_empty():
                     # legacy workdir (pre-keybloom engine): one-time rebuild
                     # from the stored raw keys (superset incl. superseded —
                     # extra positives are harmless, see above)
@@ -588,25 +572,19 @@ class CrawlEngine:
             self.web_params, self.budget, self.archive_pages, epoch=epoch
         )
         # D9 routing join: batch rows whose key is in the raw-page archive
-        # go to a PARSE-ONLY stage (re-parse without re-fetch,
-        # DetailCrawler.php:105-123); search pages always fetch (the
-        # reference caches detail pages, and the two-hop child fetch cannot
-        # run from cache). The fetch and parse lanes are one union, one
-        # staging write — a single job.
+        # carry the archived body into the fetch stage, which re-parses it
+        # instead of fetching (DetailCrawler.php:105-123); search pages
+        # always fetch (the reference caches detail pages, and the two-hop
+        # child fetch cannot run from cache). Cached rows ride the same
+        # lanes and are numbered in the host's sequence like fetched rows.
         to_fetch = batch
-        staged = None
         if self.archive_pages and not self.pages.is_empty():
             arch = self.pages.read().filter(F.col("status") == "ok").select(
                 "url_key", "body"
             )
-            cached = (
-                batch.filter(~F.col("canonical_url").contains("/search"))
-                .join(arch, "url_key")
-                .select("url_key", "canonical_url", "host", "body")
-            )
-            to_fetch = batch.join(cached.select("url_key"), "url_key", "left_anti")
-            staged = cached.repartition(self.fetch_partitions, "url_key").mapInPandas(
-                make_parse_stage(epoch), STAGE_DDL
+            to_fetch = batch.join(arch, "url_key", "left").withColumn(
+                "body",
+                F.when(~F.col("canonical_url").contains("/search"), F.col("body")),
             )
         # rules ride along as a column (constant per host, parsed once per
         # host per partition in-stage): a broadcast join for small robots
@@ -639,8 +617,6 @@ class CrawlEngine:
         fetched_df = lanes.sortWithinPartitions("host", *ORDER_COLS).mapInPandas(
             stage, STAGE_DDL
         )
-        if staged is not None:
-            fetched_df = fetched_df.unionByName(staged)
         staging = os.path.join(self.workdir, "staging", f"epoch={epoch}")
         # staging is PARTITIONED BY row_type: (a) every downstream read
         # filters on row_type, which becomes partition pruning — the commit
@@ -760,11 +736,9 @@ class CrawlEngine:
         def _payload_commit(
             table: SnapTable, part_dir: str, df_rows, key: str, n_rows: int
         ) -> None:
-            keybloom = self._payload_keyblooms.get(part_dir)
-            use_bloom = keybloom is not None and self.payload_key_gate == "bloom"
+            keybloom = self._payload_keyblooms[part_dir]
             src = os.path.join(staging, f"row_type={part_dir}")
-            can_adopt = (not self.keep_staging) and n_rows > 0 and os.path.isdir(src)
-            if can_adopt:
+            if not self.keep_staging and n_rows > 0 and os.path.isdir(src):
                 # ONE narrow key job yields the distinct count AND the
                 # in-batch duplicate keys (the old path computed only the
                 # distinct count from the same shuffle).
@@ -772,14 +746,14 @@ class CrawlEngine:
                     fetched.filter(F.col("row_type") == part_dir)
                     .groupBy(key)
                     .agg(F.count(F.lit(1)).alias("_n"))
+                    .withColumn("_kh", F.xxhash64(F.col(key)))
                 )
-                if use_bloom:
-                    cnt = cnt.withColumn("_kh", F.xxhash64(F.col(key)))
                 # adopt RENAMES the staging files this plan reads, so every
                 # post-adopt use (dup keys, the Bloom add) must come from
                 # the cache — persist is materialized by the agg below
                 cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
                 patch_rows = None
+                gate = None
                 try:
                     agg = cnt.agg(
                         F.count(F.lit(1)).alias("_nd"),
@@ -788,7 +762,7 @@ class CrawlEngine:
                         ).alias("_ndup"),
                     ).first()
                     n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
-                    if n_dist < n_rows and self.payload_patch:
+                    if n_dist < n_rows:
                         # ADOPT + PATCH: a few in-batch duplicate keys must
                         # not force a full-batch byte rewrite (the sustained
                         # campaign measured the MoR fallback at 2-3x the
@@ -806,103 +780,66 @@ class CrawlEngine:
                             F.broadcast(dup_keys), key, "left_semi"
                         ).persist(StorageLevel.MEMORY_AND_DISK)
                         patch_rows.count()  # materialize before the rename
-                    if n_dist == n_rows or patch_rows is not None:
-                        # zero-copy adopt regardless of cross-epoch matches:
-                        # matched keys become an equality-delete entry riding
-                        # the same commit. Gate "bloom" (default) finds them
-                        # by probing the batch keys against the maintained
-                        # payload-key Bloom — O(batch), conservative superset
-                        # (false positives are harmless no-op deletes, see
-                        # __init__); gate "scan" is the exact raw-key-column
-                        # scan, which reads O(table files) every epoch.
-                        files = [
-                            os.path.join(src, fn)
-                            for fn in os.listdir(src)
-                            if fn.endswith(".parquet")
-                        ]
-                        matched = None
-                        gate = None
-                        n_matched = 0
-                        if use_bloom:
-                            # FUSED probe+insert: one shard shuffle yields
-                            # the matched-key membership test AND the Bloom
-                            # add that used to be a second full-batch
-                            # shuffle after the adopt. The add landing even
-                            # if a later step aborts the epoch is the
-                            # documented harmless-lingering-positive case.
-                            gate = keybloom.check_add_spark(cnt, "_kh")
-                            if not table.is_empty():
-                                matched = gate.filter(
-                                    F.col("maybe_seen")
-                                ).select(key)
-                                n_matched = matched.count()
-                        elif not table.is_empty():
-                            matched = cnt.select(key).join(
-                                table.read_keys_raw(), key, "left_semi"
-                            ).persist(StorageLevel.MEMORY_AND_DISK)
-                            n_matched = matched.count()
-                        try:
-                            table.adopt_files(
-                                files,
-                                summary={
-                                    "epoch": epoch, "adopted": True,
-                                    "matched": n_matched, "patched": n_dup,
-                                },
-                                delete_keys_df=matched if n_matched else None,
-                            )
-                        finally:
-                            if gate is not None:
-                                gate.unpersist()
-                            elif matched is not None:
-                                matched.unpersist()
-                        if patch_rows is not None:
-                            table.merge(
-                                patch_rows,
-                                summary={
-                                    "epoch": epoch, "mor": True, "patch": True,
-                                },
-                                dedupe=False, mor=True, insert_direct=True,
-                            )
-                        if use_bloom:
-                            self._maybe_rebuild_keybloom(keybloom, table, key)
-                        elif keybloom is not None:
-                            # scan-mode epochs must still MAINTAIN the Bloom
-                            # (ADVICE r5): a later reopen with the default
-                            # 'bloom' gate loads this file, and a key the
-                            # scan-mode commit skipped would be a false
-                            # negative — breaking the no-FN safety argument
-                            keybloom.add_spark(
-                                cnt.select(
-                                    F.xxhash64(F.col(key)).alias("_kh")
-                                ),
-                                "_kh",
-                            )
-                        payload_paths[part_dir] = (
-                            "adopt" if patch_rows is None else "adopt_patch"
+                    # zero-copy adopt regardless of cross-epoch matches:
+                    # matched keys become an equality-delete entry riding
+                    # the same commit, found by probing the batch keys
+                    # against the maintained payload-key Bloom — O(batch),
+                    # a conservative superset (false positives are harmless
+                    # no-op deletes, see __init__). FUSED probe+insert: one
+                    # shard shuffle yields the membership test AND the Bloom
+                    # add; the add landing even if a later step aborts the
+                    # epoch is the documented harmless-lingering-positive
+                    # case.
+                    files = [
+                        os.path.join(src, fn)
+                        for fn in os.listdir(src)
+                        if fn.endswith(".parquet")
+                    ]
+                    gate = keybloom.check_add_spark(cnt, "_kh")
+                    matched = None
+                    n_matched = 0
+                    if not table.is_empty():
+                        matched = gate.filter(F.col("maybe_seen")).select(key)
+                        n_matched = matched.count()
+                    table.adopt_files(
+                        files,
+                        summary={
+                            "epoch": epoch, "adopted": True,
+                            "matched": n_matched, "patched": n_dup,
+                        },
+                        delete_keys_df=matched if n_matched else None,
+                    )
+                    if patch_rows is not None:
+                        table.merge(
+                            patch_rows,
+                            summary={"epoch": epoch, "mor": True, "patch": True},
+                            dedupe=False, mor=True, insert_direct=True,
                         )
-                        return
+                    self._maybe_rebuild_keybloom(keybloom, table, key)
+                    payload_paths[part_dir] = (
+                        "adopt" if patch_rows is None else "adopt_patch"
+                    )
+                    return
                 finally:
+                    if gate is not None:
+                        gate.unpersist()
                     cnt.unpersist()
                     if patch_rows is not None:
                         patch_rows.unpersist()
-            # fallback (payload_patch=False, keep_staging, or empty batch):
-            # in-batch duplicate keys take the full-batch MERGE-ON-READ
-            # upsert — append O(batch) + an equality-delete entry; never an
-            # O(table) rewrite (refresh crawls re-crawl whole epochs). The
-            # read tax is folded back by the vacuum compaction cadence.
+            # fallback (keep_staging, or an empty or absent staging
+            # partition): the full-batch MERGE-ON-READ upsert — append
+            # O(batch) + an equality-delete entry; never an O(table)
+            # rewrite (refresh crawls re-crawl whole epochs). The read tax
+            # is folded back by the vacuum compaction cadence.
             table.merge(
                 df_rows, summary={"epoch": epoch, "mor": True}, dedupe=False,
                 mor=True, insert_direct=True,
             )
-            # the Bloom is maintained in BOTH gate modes (ADVICE r5): scan
-            # mode merely doesn't probe it, but it must stay a superset of
-            # committed keys for any later bloom-gated epoch
-            if keybloom is not None and n_rows > 0:
+            if n_rows > 0:
                 keybloom.add_spark(
                     df_rows.select(F.xxhash64(F.col(key)).alias("_kh")), "_kh"
                 )
-                if use_bloom:
-                    self._maybe_rebuild_keybloom(keybloom, table, key)
+                self._maybe_rebuild_keybloom(keybloom, table, key)
             payload_paths[part_dir] = "mor"
 
         def _c_images() -> None:
@@ -1035,166 +972,54 @@ class CrawlEngine:
             # arrival — identical in strict and salted modes, and equal to
             # the reference's sequential order per host (SURVEY.md §7).
             #
-            # STAGED-RANKING fast path (round 5 — VERDICT r4 #2): the fetch
-            # stage receives rows sorted by (host, order key) within
+            # STAGED RANKING (round 5 — VERDICT r4 #2): the fetch stage
+            # receives rows sorted by (host, order key) within
             # range-contiguous lanes, so the partition-local host_seq it
-            # already emits IS the per-host rank up to a per-(partition,
-            # host) offset — and those offsets are the n_ord counts the
-            # epoch's single stats pass collected. The order-log commit is
-            # then ONE narrow column-pruned staging scan, a broadcast join
-            # against the tiny offsets table (empty in strict mode: a host
-            # never straddles partitions there), and the append — no batch
-            # re-join, no range-sampling job, no sort, no persist. The
-            # offsets side is O(host-partition pairs that straddle a lane
-            # boundary); at 10^6 hosts it stays O(hosts) rows — driver-built
-            # but broadcast once per executor, never captured per task.
-            # Excluded only in archive mode: parse-lane 'cached' statuses
-            # carry no stage sequence, so that mode keeps the derived
-            # ranking below (bit-identical output, test-pinned).
-            if not self.archive_pages:
-                per_host: dict[str, list] = {}
-                for r in groups:
-                    if r["n_ord"]:
-                        per_host.setdefault(r["host"], []).append(
-                            (r["partition_id"], r["n_ord"])
-                        )
-                off_rows = []
-                for h, lst in per_host.items():
-                    acc = 0
-                    for pid, c in sorted(lst):
-                        if acc:
-                            off_rows.append((h, pid, acc))
-                        acc += c
-                ranked = statuses.filter(F.col("host_seq").isNotNull())
-                if off_rows:
-                    off_df = self.spark.createDataFrame(
-                        off_rows, "host string, partition_id int, _off long"
+            # already emits — for fetched, robots-denied AND cached rows —
+            # IS the per-host rank up to a per-(partition, host) offset, and
+            # those offsets are the n_ord counts the epoch's single stats
+            # pass collected. The order-log commit is then ONE narrow
+            # column-pruned staging scan, a broadcast join against the tiny
+            # offsets table (empty in strict mode: a host never straddles
+            # partitions there), and the append — no batch re-join, no
+            # range-sampling job, no sort, no persist. The offsets side is
+            # O(host-partition pairs that straddle a lane boundary); at 10^6
+            # hosts it stays O(hosts) rows — driver-built but broadcast once
+            # per executor, never captured per task.
+            per_host: dict[str, list] = {}
+            for r in groups:
+                if r["n_ord"]:
+                    per_host.setdefault(r["host"], []).append(
+                        (r["partition_id"], r["n_ord"])
                     )
-                    seq = (
-                        F.coalesce(F.col("_off"), F.lit(0)) + F.col("host_seq")
-                    ).cast("long")
-                    ranked = ranked.join(
-                        F.broadcast(off_df), ["host", "partition_id"], "left"
-                    )
-                else:
-                    seq = F.col("host_seq").cast("long")
-                self.order_log.append(
-                    ranked.select(
-                        "url_key", "host", F.lit(epoch).alias("epoch"),
-                        seq.alias("host_seq"), "status", "attempts", "n_payload",
-                    ),
-                    summary={"epoch": epoch},
-                    bucketize=False,
+            off_rows = []
+            for h, lst in per_host.items():
+                acc = 0
+                for pid, c in sorted(lst):
+                    if acc:
+                        off_rows.append((h, pid, acc))
+                    acc += c
+            ranked = statuses.filter(F.col("host_seq").isNotNull())
+            if off_rows:
+                off_df = self.spark.createDataFrame(
+                    off_rows, "host string, partition_id int, _off long"
                 )
-                return
-            # ADAPTIVE ranking (VERDICT r3 #1a): below ranking_window_rows a
-            # plain row_number window is cheaper — one sort task even for the
-            # 80%-skew host beats repartitionByRange sampling + a count
-            # groupBy + a mapInPandas pass. Above it, ranking is the
-            # two-phase SKEW-FREE computation: range-partition on (host,
-            # order key) — the hot host spans many partitions — local sort,
-            # then per-(partition, host) counts give each partition its
-            # global offset; a narrow mapInPandas assigns offset + local
-            # position. Both paths are bit-identical: the rank is defined by
-            # the sort key, not by row placement.
-            import pandas as pd
-
-            order_cols = ["priority", "org_idx", "type_idx", "page", "url_key"]
-            out_ddl = (
-                "url_key long, host string, epoch int, host_seq long, "
-                "status string, attempts int, n_payload int"
-            )
-            joined = batch.select("url_key", "host", *order_cols[:-1]).join(
-                statuses.select("url_key", "status", "attempts", "n_payload"),
-                "url_key",
-            )
-            if n_batch <= self.ranking_window_rows:
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("host").orderBy(*order_cols)
-                ranked = joined.select(
-                    "url_key",
-                    "host",
-                    F.lit(epoch).alias("epoch"),
-                    (F.row_number().over(w) - 1).cast("long").alias("host_seq"),
-                    "status",
-                    "attempts",
-                    "n_payload",
+                seq = (
+                    F.coalesce(F.col("_off"), F.lit(0)) + F.col("host_seq")
+                ).cast("long")
+                ranked = ranked.join(
+                    F.broadcast(off_df), ["host", "partition_id"], "left"
                 )
-                self.order_log.append(
-                    ranked, summary={"epoch": epoch}, bucketize=False
-                )
-                return
-            rng = (
-                joined.repartitionByRange(self.fetch_partitions, "host", *order_cols)
-                .sortWithinPartitions("host", *order_cols)
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            else:
+                seq = F.col("host_seq").cast("long")
+            self.order_log.append(
+                ranked.select(
+                    "url_key", "host", F.lit(epoch).alias("epoch"),
+                    seq.alias("host_seq"), "status", "attempts", "n_payload",
+                ),
+                summary={"epoch": epoch},
+                bucketize=False,  # append-only evidence table, never MERGEd
             )
-            try:
-                cnt_rows = (
-                    rng.withColumn("_pid", F.spark_partition_id())
-                    .groupBy("_pid", "host")
-                    .count()
-                    .collect()
-                )  # O(partitions + hosts straddling boundaries) driver rows
-                per_host: dict[str, list] = {}
-                for r in cnt_rows:
-                    per_host.setdefault(r["host"], []).append((r["_pid"], r["count"]))
-                offsets: dict[tuple[int, str], int] = {}
-                for h, lst in per_host.items():
-                    acc = 0
-                    for pid, c in sorted(lst):
-                        offsets[(pid, h)] = acc
-                        acc += c
-                ep = epoch
-                # the offsets map is O(distinct (partition, host) pairs) —
-                # broadcast it instead of shipping it inside every task
-                # closure (at 10^6 hosts a closure-captured dict re-uploads
-                # multi-MB per task; a broadcast ships once per executor)
-                bc_offsets = self.spark.sparkContext.broadcast(offsets)
-
-                def assign(it):
-                    from pyspark import TaskContext
-
-                    offs = bc_offsets.value
-                    pid = TaskContext.get().partitionId()
-                    done_h: dict[str, int] = {}  # rows emitted per host so far
-                    for pdf in it:
-                        counts = pdf["host"].value_counts()
-                        # dict-backed Series.map (C hash lookups), built per
-                        # batch over the few distinct hosts — no per-row lambda
-                        base_by_host = {
-                            h: offs.get((pid, h), 0) + done_h.get(h, 0)
-                            for h in counts.index
-                        }
-                        seq = pdf["host"].map(base_by_host) + pdf.groupby(
-                            "host"
-                        ).cumcount()
-                        for h, c in counts.items():
-                            done_h[h] = done_h.get(h, 0) + int(c)
-                        yield pd.DataFrame(
-                            {
-                                "url_key": pdf["url_key"],
-                                "host": pdf["host"],
-                                "epoch": ep,
-                                "host_seq": seq.astype("int64"),
-                                "status": pdf["status"],
-                                "attempts": pdf["attempts"],
-                                "n_payload": pdf["n_payload"],
-                            }
-                        )
-
-                ranked = rng.mapInPandas(assign, out_ddl)
-                try:
-                    self.order_log.append(
-                        ranked,
-                        summary={"epoch": epoch},
-                        bucketize=False,  # append-only evidence table, never MERGEd
-                    )
-                finally:
-                    bc_offsets.unpersist()
-            finally:
-                rng.unpersist()
 
         def _c_lineage() -> None:
             lineage_rows = self.spark.createDataFrame(

@@ -7,8 +7,8 @@
   version migrates on open; the D7 corruption probe works on legacy data
   files via on-the-fly derived-column healing (ADVICE r3 medium)
 - merge touched_hint="all": skips the discovery job, result identical
-- adaptive order-log ranking: the small-batch window path and the two-phase
-  path produce bit-identical order logs
+- order-log ranking: the staged ranker equals a test-side row_number
+  reference in strict, range-lane and archive (cached + fetched) epochs
 """
 
 from __future__ import annotations
@@ -16,10 +16,12 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from biz_crawlers_spark.engine.crawl import CrawlEngine
 from biz_crawlers_spark.frontier.seed import (
+    ORDER_COLS,
     RECORDS_CORRUPT_EXPR,
     RECORDS_DDL,
     synthetic_seed_df,
@@ -163,28 +165,75 @@ def test_prefix_filter_exact_on_zipfian_corpus(spark, tmp_path):
     assert len(cj) >= 20, "the dup fraction must produce real pairs"
 
 
-def test_order_log_ranking_paths_identical(spark, tmp_path):
-    """All THREE ranking paths must be bit-identical (the rank is defined by
-    the sort key, not by placement): the round-5 staged fast path (default,
-    archive_pages=False — host_seq composed from the stage's own sequence +
-    stats-pass offsets), the window path (archive mode, small batch), and
-    the two-phase range path (archive mode, ranking_window_rows=0). A fresh
-    archive-mode epoch has no cached pages, so its order log covers the
-    same rows as the staged path."""
-    logs = {}
-    variants = (
-        ("staged", {}),
-        ("staged_salted", {"fetch_salting": 4}),  # range lanes, real offsets
-        ("win", {"archive_pages": True}),
-        ("twophase", {"archive_pages": True, "ranking_window_rows": 0}),
+def _order_log(eng, epoch: int) -> list:
+    return sorted(
+        (r["host"], r["host_seq"], r["url_key"], r["status"])
+        for r in eng.order_log.read().filter(F.col("epoch") == epoch).collect()
     )
-    for name, kw in variants:
-        eng = _engine(spark, tmp_path / f"rank_{name}", **kw)
+
+
+def _reference_order_log(spark, eng, epoch: int) -> list:
+    """Test-side reference ranking: row_number over (host, *ORDER_COLS) on
+    the epoch's batch joined with its statuses. The statuses come from the
+    kept staging output (frontier rows only: two-hop detail fetches are not
+    ranked); the batch columns come from the frontier."""
+    staging = os.path.join(eng.workdir, "staging", f"epoch={epoch}")
+    statuses = (
+        spark.read.parquet(staging)
+        .filter((F.col("row_type") == "status") & F.col("parent_key").isNull())
+        .select("url_key", "status")
+    )
+    w = Window.partitionBy("host").orderBy(*ORDER_COLS)
+    ranked = (
+        eng.frontier.read()
+        .select("host", *ORDER_COLS)
+        .join(statuses, "url_key")
+        .select(
+            "host", (F.row_number().over(w) - 1).alias("host_seq"),
+            "url_key", "status",
+        )
+    )
+    return sorted(
+        (r["host"], r["host_seq"], r["url_key"], r["status"])
+        for r in ranked.collect()
+    )
+
+
+def test_order_log_matches_reference_ranking(spark, tmp_path):
+    """The order log (the fetch stage's own per-host sequence + stats-pass
+    offsets) equals a test-side row_number ranking in strict mode, in
+    range-lane mode (fetch_salting=4: real offsets) and in archive mode —
+    including an archive epoch in which hosts mix cached re-parses with
+    fetched rows, so cached rows are numbered in place."""
+    variants = {
+        "strict": {},
+        "salted": {"fetch_salting": 4},
+        "archive": {"archive_pages": True},
+        "archive_salted": {"archive_pages": True, "fetch_salting": 4},
+    }
+    logs = {}
+    for name, kw in variants.items():
+        eng = _engine(spark, tmp_path / f"rank_{name}", keep_staging=True, **kw)
         eng.add_seed_df(synthetic_seed_df(spark, 400, n_hosts=8))
         eng.run_epoch()
-        logs[name] = sorted(
-            (r["host"], r["host_seq"], r["url_key"], r["status"])
-            for r in eng.order_log.read().collect()
-        )
-    assert logs["staged"] == logs["win"] == logs["twophase"] == logs["staged_salted"]
-    assert len(logs["staged"]) > 0
+        logs[name] = _order_log(eng, 0)
+        assert logs[name] == _reference_order_log(spark, eng, 0), name
+        if not kw.get("archive_pages"):
+            continue
+        # epoch 1: re-crawl epoch 0's URLs (archived ok pages re-parse as
+        # 'cached') together with fresh URLs on the same hosts (fetched)
+        eng.seen.merge(eng.seen.read().select("url_key"), delete=True, dedupe=False)
+        done = eng.frontier.read().filter(F.col("state") == "done")
+        eng.frontier.merge(done.withColumn("state", F.lit("pending")))
+        eng.add_seed_df(synthetic_seed_df(spark, 200, n_hosts=8, start_id=400))
+        st = eng.run_epoch()
+        assert st["cache_hits"] > 0 and st["fetched"] > 0, name
+        mixed = _order_log(eng, 1)
+        cached_hosts = {h for h, _, _, s in mixed if s == "cached"}
+        fetched_hosts = {h for h, _, _, s in mixed if s != "cached"}
+        assert cached_hosts & fetched_hosts, "no host mixes cached and fetched rows"
+        assert mixed == _reference_order_log(spark, eng, 1), name
+        logs[f"{name}_mixed"] = mixed
+    assert logs["strict"] == logs["salted"] == logs["archive"] == logs["archive_salted"]
+    assert logs["archive_mixed"] == logs["archive_salted_mixed"]
+    assert len(logs["strict"]) > 0

@@ -486,23 +486,58 @@ def _force_recrawl(eng):
     eng.frontier.merge(fr.withColumn("state", F.lit("pending")))
 
 
-def test_payload_key_gate_bloom_scan_equivalent(spark, tmp_path):
-    """The Bloom gate and the exact raw-scan gate produce identical table
-    contents through a fresh epoch + a full forced re-crawl."""
+def _exact_matched_keys(spark, table, key, raw_keys: list) -> set:
+    """The exact raw-key-scan gate (test-side reference): the keys of the
+    last epoch's batch left-semi joined with ``read_keys_raw()`` of the
+    table as it stood before that epoch."""
+    e_max = table.read().agg(F.max("epoch")).first()[0]
+    batch_keys = table.read().filter(F.col("epoch") == e_max).select(key)
+    raw = spark.createDataFrame([(k,) for k in raw_keys], table.read_keys_raw().schema)
+    return {r[key] for r in batch_keys.join(raw, key, "left_semi").collect()}
+
+
+def _delete_keys(table, sid: int, key: str) -> set:
+    """Keys of the equality-delete entry written by snapshot ``sid``."""
+    m = table._load_manifest(sid)
+    (entry,) = [d for d in m.get("deletes", []) if d["seq"] == sid]
+    df = table.spark.read.parquet(os.path.join(table.path, entry["path"]))
+    return {r[key] for r in df.collect()}
+
+
+def test_payload_bloom_gate_superset_of_exact_scan(spark, tmp_path):
+    """Through a fresh epoch + a full forced re-crawl, the Bloom gate's
+    matched keys are a superset of the exact raw-key-scan reference, and the
+    adopted tables equal those of a keep_staging engine, which commits
+    through merge-on-read."""
+    payload = (("image", "images", "image_id"), ("record", "records", "entity_id"))
     results = {}
-    for gate in ("bloom", "scan"):
+    for mode, kw in (("bloom", {}), ("mor", {"keep_staging": True})):
         eng = _engine(
-            spark, tmp_path / f"eq_{gate}", per_host_budget=10**9,
-            fetch_salting=2, payload_key_gate=gate,
+            spark, tmp_path / f"eq_{mode}", per_host_budget=10**9,
+            fetch_salting=2, **kw,
         )
         eng.add_seed_df(synthetic_seed_df(spark, 300, n_hosts=8))
         eng.run_epoch()
         _force_recrawl(eng)
+        raw_before = {
+            name: [r[key] for r in getattr(eng, name).read_keys_raw().collect()]
+            for _, name, key in payload
+        }
         st = eng.run_epoch()
-        assert st["payload_paths"].get("image") == "adopt"
-        m = eng.images._load_manifest(eng.images.current_snapshot_id())
-        assert int(m["summary"].get("matched", 0)) > 0, gate
-        results[gate] = {
+        assert st["payload_paths"].get("image") == ("adopt" if mode == "bloom" else "mor")
+        if mode == "bloom":
+            for part, name, key in payload:
+                t = getattr(eng, name)
+                sid = t.current_snapshot_id()
+                if st["payload_paths"][part] == "adopt_patch":
+                    sid -= 1  # the patch commit follows the adopt
+                exact = _exact_matched_keys(spark, t, key, raw_before[name])
+                assert exact, name
+                gated = _delete_keys(t, sid, key)
+                assert exact <= gated, name
+                m = t._load_manifest(sid)
+                assert int(m["summary"]["matched"]) == len(gated)
+        results[mode] = {
             "images": sorted(
                 (r["image_id"], r["epoch"], r["phash"])
                 for r in eng.images.read().collect()
@@ -512,7 +547,7 @@ def test_payload_key_gate_bloom_scan_equivalent(spark, tmp_path):
                 for r in eng.records.read().collect()
             ),
         }
-    assert results["bloom"] == results["scan"]
+    assert results["bloom"] == results["mor"]
 
 
 def test_keybloom_false_positives_harmless(spark, tmp_path):
@@ -643,9 +678,9 @@ def test_adopt_patch_table_contract(spark, tmp_path):
 
 
 def test_adopt_patch_engine_equivalence(spark, tmp_path):
-    """payload_patch=True (adopt + O(dup) patch commit) and =False (full
-    MoR fallback) produce identical record tables on a batch with one
-    in-batch duplicate entity_id."""
+    """adopt + O(dup) patch commit and a keep_staging engine's full-batch
+    merge-on-read commit produce identical record tables on a batch with
+    one in-batch duplicate entity_id."""
     from biz_crawlers_spark.fixtures.web import FixtureWeb
 
     web = FixtureWeb(seed=42, n_hosts=8, max_images_per_page=1)
@@ -661,7 +696,7 @@ def test_adopt_patch_engine_equivalence(spark, tmp_path):
     for patch in (True, False):
         eng = _engine(
             spark, tmp_path / f"ap_{patch}", per_host_budget=10**9,
-            fetch_salting=2, payload_patch=patch,
+            fetch_salting=2, keep_staging=not patch,
         )
         eng.add_seed_df(_collision_seed(spark))
         st = eng.run_epoch()
@@ -701,6 +736,31 @@ def test_adopt_patch_with_recrawl_matches(spark, tmp_path):
     assert recs.select("entity_id").distinct().count() == n1
     e_max = recs.agg(F.max("epoch")).first()[0]
     assert recs.filter(F.col("epoch") == e_max).count() == n1
+
+
+# try_parse_json verdicts that Python's json module gets wrong by default:
+# duplicate keys (Spark: corrupt), trailing content after a root object
+# (Spark: valid), plus the strictness cases around them
+_CORRUPT_PROBES = [
+    '{"a":1,"a":2}', '[{"a":1},{"a":1,"a":2}]', '{"a":1} x', "NaN", "[1,]",
+    "1e999", '"\\ud800"', "123", '{"\\u0061":1,"a":2}', '{"a":{"b":1,"b":2}}',
+    ' {"a":1}\n', "1 x", "1]", "01", "truex", "true]", "\x0b1", '"\t"', "", "[]",
+]
+
+
+@pytest.mark.parametrize("biz_items", _CORRUPT_PROBES)
+def test_record_corrupt_matches_try_parse_json(spark, biz_items):
+    """The stage's precomputed ``corrupt`` (what an adopted staging file
+    commits) equals the records table's generated column."""
+    from biz_crawlers_spark.engine.stage import _record_corrupt
+    from biz_crawlers_spark.frontier.seed import RECORDS_CORRUPT_EXPR
+
+    want = (
+        spark.createDataFrame([(biz_items,)], "biz_items string")
+        .selectExpr(f"{RECORDS_CORRUPT_EXPR} AS c")
+        .first()["c"]
+    )
+    assert _record_corrupt(biz_items) == want
 
 
 def test_check_add_spark_equivalent(spark, tmp_path):

@@ -95,14 +95,6 @@ def worker() -> None:
             bloom_shards=32, bloom_bits=1 << 23, table_buckets=32,
             fetch_partitions=CPUS,
             fetch_salting=CPUS,
-            # A/B attribution knob: "bloom" (default) probes batch keys
-            # against the maintained payload-key Bloom; "scan" is the exact
-            # raw-key-column scan gate it replaced
-            payload_key_gate=os.environ.get("SPARK_GRAFT_PAYLOAD_GATE", "bloom"),
-            # A/B attribution knob: patch (default) adopts batches with
-            # in-batch duplicate keys and re-writes only the duplicated
-            # keys' rows; 0 restores the full-batch MoR fallback
-            payload_patch=os.environ.get("SPARK_GRAFT_PAYLOAD_PATCH", "1") == "1",
         )
 
     wd_warm = tempfile.mkdtemp(prefix="sustwarm_", dir=_workdir_base())
