@@ -23,9 +23,11 @@ git-commit durability, crawl-details.php:245-291):
      rolls back any table that is ahead of the record)
   7. epoch ends; repeat until the frontier drains (early termination, §4.1)
 
-Exactly two shuffles touch the wide path per epoch: the budget selection and
-the by-host repartition; image bytes are shuffled once more only as the MERGE
-write into the images table (the sink itself). Per-epoch driver-sequenced
+Three shuffles touch the wide path per epoch: the budget selection's two
+(one on (host, salt), one on host — both over the narrow frontier rows, the
+second over at most S·K rows per host) and the by-host repartition into the
+fetch stage; image bytes are shuffled once more only as the MERGE write into
+the images table (the sink itself). Per-epoch driver-sequenced
 jobs are consolidated: ONE stats pass over staging yields the lineage rows
 AND the epoch totals; merges persist their update plans so staging is never
 re-scanned twice per commit.
@@ -327,20 +329,33 @@ class CrawlEngine:
         the next crawl invocation): inserts unknown URLs AND reopens known
         ones to pending, so the dedup layer — not frontier state — decides
         what actually re-fetches (everything inside the TTL window dedups to
-        done, D7)."""
-        df = seed_df(self.spark, seeds, epoch=self.current_epoch())
+        done, D7).
+
+        One merge, one snapshot. The update rows are the seeds left-joined
+        with the current frontier, each column ``coalesce(old, seed)``
+        except ``state='pending'`` and ``not_before=epoch``. That is what
+        insert-if-absent (``prefer="old"``: old values win, seeds fill the
+        gaps and new keys) followed by a reopen (only state and not_before
+        set, every other column kept) leaves behind, so applying these rows
+        with ``prefer="new"`` writes the same rows. Seeds are deduplicated
+        on url_key and the frontier is key-unique, so the rows are too."""
+        epoch = self.current_epoch()
+        new = seed_df(self.spark, seeds, epoch=epoch).dropDuplicates(["url_key"])
+        reopen = {"state": F.lit("pending"), "not_before": F.lit(epoch)}
+        rows = new.alias("n").join(self.frontier.read().alias("o"), "url_key", "left")
         self.frontier.merge(
-            df, prefer="old", summary={"op": "reseed"}, mostly_new=True
-        )
-        self.frontier.merge(
-            df.select(
+            rows.select(
                 "url_key",
-                F.lit("pending").alias("state"),
-                F.lit(self.current_epoch()).alias("not_before"),
+                *[
+                    reopen.get(c, F.coalesce(F.col(f"o.{c}"), F.col(f"n.{c}"))).alias(c)
+                    for c in new.columns
+                    if c != "url_key"
+                ],
             ),
-            summary={"op": "reseed_reopen"},
+            summary={"op": "reseed"},
+            dedupe=False,
         )
-        self._record_state(self.current_epoch())
+        self._record_state(epoch)
 
     def resume(self) -> int:
         """Crash recovery. (1) Epoch atomicity: any table whose current
@@ -438,14 +453,14 @@ class CrawlEngine:
         epoch = self.current_epoch()
         fr = self.frontier.read()
         pending = fr.filter((F.col("state") == "pending") & (F.col("not_before") <= epoch))
+        # the frontier is key-unique (SnapTable merge invariant) and a key
+        # has one host, so the top-K needs no dedup shuffle after it
         if self.per_host_budget >= UNBOUNDED_BUDGET:
             # fast path: an unbindable budget makes top-K a no-op — skip the
-            # two-phase selection (frontier is already key-unique)
+            # two-phase selection
             selected = pending
         else:
-            selected = select_per_host_topk(pending, self.per_host_budget).dropDuplicates(
-                ["url_key"]
-            )
+            selected = select_per_host_topk(pending, self.per_host_budget)
 
         # dedup: Bloom prefilter, exact anti-join only on positives (§4.1).
         # Empty-seen fast path (r06): on a fresh workdir's first epoch the

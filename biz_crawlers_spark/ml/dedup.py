@@ -202,6 +202,10 @@ def _jaccard_dense(
     rounding semantics are bit-identical to the count-join/oracle."""
     par = spark.sparkContext.defaultParallelism
     nv = len(vocab)
+    if nv == 0:
+        # every doc has empty grams: no shared shingle, so no pair (as in the
+        # count-join), and a zero-width bitmap cannot be unpacked per doc
+        return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
     gid = {g: i for i, g in enumerate(vocab)}
     bgid = spark.sparkContext.broadcast(gid)
     t = float(threshold)

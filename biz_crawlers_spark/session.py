@@ -14,6 +14,30 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem(mem_total_kib: int | None) -> str:
+    """Local-mode heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 40% of the
+    host's memory, capped at 48g (the size measured on a 128 GiB box). The
+    rest is left to the Python workers and the OS cache; a fixed 48g on a
+    15 GiB host would let the JVM grow past the machine. ``None`` (memory
+    unknown) keeps the cap."""
+    mb = 48 * 1024
+    if mem_total_kib:
+        mb = min(mb, int(mem_total_kib * 0.4) // 1024)
+    return f"{mb}m"
+
+
+def _mem_total_kib() -> int | None:
+    """MemTotal of this host in KiB (Linux), None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
 def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
@@ -59,11 +83,16 @@ def get_spark(
         # local-mode heap: the ONE JVM hosts all `cores` concurrent tasks'
         # execution memory, so size it to the box, not to a driver's share —
         # 8g/32 tasks left ~150 MB of execution memory per task and forced
-        # sort/aggregate spill on the wide queries (guide §5). 48g on the
-        # 128 GiB sandbox leaves room for 32 Python workers + OS cache; on a
-        # cluster the submitter supplies driver/executor memory explicitly
-        # and this knob is irrelevant (env-overridable either way).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # sort/aggregate spill on the wide queries (guide §5). The default
+        # is derived from the host (default_driver_mem: 48g on a 128 GiB
+        # box, 6g on 15 GiB), leaving room for the Python workers + OS
+        # cache; on a cluster the submitter supplies driver/executor memory
+        # explicitly and this knob is irrelevant (env-overridable either way).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_mem(_mem_total_kib()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd beats snappy on BOTH wall time and size for this workload

@@ -41,6 +41,19 @@ def test_jaccard_dense_blocking_invariance(spark, monkeypatch):
     assert small == base
 
 
+def test_jaccard_dense_empty_vocabulary(spark):
+    """Every doc with empty grams gives an empty vocabulary: the dense path
+    returns the count-join's answer (no pairs) instead of failing to unpack
+    a zero-width bitmap."""
+    sh = spark.createDataFrame(
+        [(i, []) for i in range(5)], "doc_id long, grams array<string>"
+    )
+    dense = D._jaccard_dense(spark, sh, [], 0.5)
+    count = D._jaccard_countjoin(sh, 0.5)
+    assert dense.schema == count.schema
+    assert dense.collect() == count.collect() == []
+
+
 def test_minhash_bucket_verify_matches_reference(spark):
     """The bucket-local numpy verification must equal the definitional
     join-based formulation: every pair sharing ≥1 band, estimated Jaccard =

@@ -191,3 +191,63 @@ def test_vacuum_storage_maintenance(spark, tmp_path):
     assert fresh.records.read().count() == n_records
     st = fresh.run_epoch()
     assert st["drained"] or st["fetched"] == 0
+
+
+def test_reseed_one_merge_equals_insert_then_reopen(spark, tmp_path):
+    """reseed_from_urls commits ONE frontier snapshot whose rows equal the
+    two-merge reference: insert-if-absent (prefer="old"), then a reopen that
+    sets only state and not_before. Covered: a pending row with retries, a
+    done, a failed and a denied row, a known row with a NULL column (the
+    seed fills it), a discovered row whose stored order key differs from its
+    seed's (the stored values win), unknown URLs, and a duplicate seed."""
+    import shutil
+    from dataclasses import replace
+
+    from biz_crawlers_spark.frontier.seed import FRONTIER_DDL, seed_df, seed_rows
+
+    seeds = company_seed(114, 3)
+    known, unknown = seeds[:6], seeds[6:10]
+    rows = [list(r) for r in seed_rows(known)]
+    # cols: url_key, canonical_url, host, org_idx, type_idx, page, priority,
+    #       state, retries, not_before, discovered_epoch
+    rows[0][7:10] = ["pending", 2, 3]
+    rows[1][7] = "done"
+    rows[2][7:9] = ["failed", 3]
+    rows[3][7] = "denied"
+    rows[4][3] = None  # a NULL column the seed's value fills
+    rows[5][6], rows[5][10] = 999, 1  # discovered: own priority + epoch
+    rows.append(list(seed_rows([seeds[10]])[0]))
+    rows[-1][7:] = ["done", 0, 0, 2]  # known, NOT reseeded: untouched
+    reseed = known + unknown + [known[1], replace(known[5], priority=7)]
+
+    eng = _engine(spark, tmp_path / "one")
+    eng.add_seed_df(spark.createDataFrame([tuple(r) for r in rows], FRONTIER_DDL))
+    eng._record_state(4)
+    shutil.copytree(tmp_path / "one", tmp_path / "two")
+    ref = _engine(spark, tmp_path / "two")
+
+    sid = eng.frontier.current_snapshot_id()
+    eng.reseed_from_urls(reseed)
+    assert eng.frontier.current_snapshot_id() == sid + 1
+
+    df = seed_df(spark, reseed, epoch=ref.current_epoch())
+    ref.frontier.merge(df, prefer="old", mostly_new=True)
+    ref.frontier.merge(
+        df.select(
+            "url_key",
+            F.lit("pending").alias("state"),
+            F.lit(ref.current_epoch()).alias("not_before"),
+        )
+    )
+
+    def _rows(e):
+        return sorted(tuple(r) for r in e.frontier.read().collect())
+
+    got = _rows(eng)
+    assert got == _rows(ref)
+    assert len(got) == len(rows) + len(unknown)
+    by_key = {r[0]: r for r in got}
+    assert by_key[rows[0][0]][7:10] == ("pending", 2, 4)
+    assert by_key[rows[4][0]][3] == known[4].org_idx
+    assert by_key[rows[5][0]][6] == 999
+    assert by_key[rows[-1][0]][7] == "done"
