@@ -5,7 +5,7 @@ the reference ``kiang/biz_crawlers`` (sequential PHP crawler suite for Taiwan
 business registries) as an idiomatic Spark engine:
 
 - ``frontier``   — URL frontier table + canonicalization (xxhash64 keys)
-- ``filters``    — sharded Bloom filter + cuckoo filter for URL-seen dedup
+- ``filters``    — sharded Bloom filter for URL-seen dedup (+ exact anti-join)
 - ``politeness`` — per-host token buckets, robots.txt cache
 - ``fetch``      — mapInPandas fetch stage (retry/backoff as data, not control flow)
 - ``extract``    — vectorized Arrow UDF extraction (pages → image+caption pairs,

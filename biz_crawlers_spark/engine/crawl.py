@@ -3,25 +3,35 @@
 Each epoch is a micro-batch over the frontier (the Structured-Streaming-style
 loop of the north_rule; a bounded-epoch loop keeps every commit an explicit
 snapshot, which IS the checkpoint — K8 analog of the reference's periodic
-git-commit durability, crawl-details.php:245-291):
+git-commit durability, crawl-details.php:245-291). ``run_epoch`` runs five
+named phases over one ``EpochContext``; each phase (and each commit member)
+runs under its own Spark job group and is timed into ``phase_sec``:
 
-  1. pending = frontier rows eligible this epoch (state/pending + not_before)
-  2. per-host top-K budget selection (salted two-phase — engine/budget.py)
-  3. dedup: batch dropDuplicates (D1) → Bloom prefilter (no false negatives)
-     → exact anti-join against the seen table on Bloom-positives only (D2);
-     TTL mode (D7) keeps only in-window keys as duplicates
-  4. D9 routing (archive mode): one left join attaches the archived body to
-     every batch row whose key has an ``ok`` page (search pages excepted)
-  5. fetch+extract: repartition BY HOST → fused mapInPandas stage
-     (politeness + ordering live there — engine/stage.py); rows carrying an
-     archived body are re-parsed in the same stage instead of fetched →
-     ONE staging write
-  6. commits: images MERGE, records MERGE, pages MERGE, seen append + Bloom
-     (+cuckoo mirror) add, fused frontier MERGE (state transitions +
-     dedup-done + discovered inserts), order_log append, lineage append —
-     then the STATE RECORD, which makes the whole group atomic (resume()
-     rolls back any table that is ahead of the record)
-  7. epoch ends; repeat until the frontier drains (early termination, §4.1)
+  select_dedup
+    1. pending = frontier rows eligible this epoch (state/pending + not_before)
+    2. per-host top-K budget selection (salted two-phase — engine/budget.py)
+    3. dedup: batch dropDuplicates (D1) → Bloom prefilter (no false negatives)
+       → exact anti-join against the seen table on Bloom-positives only (D2);
+       TTL mode (D7) keeps only in-window keys as duplicates
+  robots
+    4. hosts missing from the robots cache are fetched in the workers (P8)
+  fetch_stage
+    5. D9 routing (archive mode): one left join attaches the archived body to
+       every batch row whose key has an ``ok`` page (search pages excepted)
+    6. fetch+extract: repartition BY HOST → fused mapInPandas stage
+       (politeness + ordering live there — engine/stage.py); rows carrying an
+       archived body are re-parsed in the same stage instead of fetched →
+       ONE staging write
+  stats_pass
+    7. one aggregate over staging: lineage rows, epoch totals, order offsets
+  commits
+    8. the ``c_*`` members, concurrently: images / records / pages adopt or
+       MERGE, seen append, Bloom add, fused frontier MERGE (state
+       transitions + dedup-done + discovered inserts), order_log append,
+       lineage append — then the STATE RECORD, which makes the whole group
+       atomic (resume() rolls back any table that is ahead of the record)
+
+The loop repeats until the frontier drains (early termination, §4.1).
 
 Three shuffles touch the wide path per epoch: the budget selection's two
 (one on (host, salt), one on host — both over the narrow frontier rows, the
@@ -32,8 +42,8 @@ jobs are consolidated: ONE stats pass over staging yields the lineage rows
 AND the epoch totals; merges persist their update plans so staging is never
 re-scanned twice per commit.
 
-Round-5 sustained-campaign design (VERDICT r4 #1/#2/#4/#7 — per-epoch cost
-must be O(batch), never O(accumulated tables), or a long campaign decays):
+Sustained-crawl design (per-epoch cost must be O(batch), never
+O(accumulated tables), or a long campaign decays):
 
 - frontier files are partitioned by (bucket, STATE); epoch-end merges
   declare ``source_parts=["pending"]`` (their matched keys are all
@@ -50,15 +60,19 @@ must be O(batch), never O(accumulated tables), or a long campaign decays):
   numbered in place like fetched ones) + per-(partition, host) offsets
   from the stats pass — a narrow scan and an append, no extra shuffle, in
   every mode
-- the Bloom filter tracks per-shard fill in version metadata and rebuilds
-  itself into a larger bit space from the seen table when saturation would
-  degrade the D2 prefilter (filters/bloom.py saturation policy)
+- the Bloom filters track per-shard fill in version metadata and rebuild
+  into a larger bit space when saturation would degrade the prefilter
+  (``_rebuild_if_saturated``; filters/bloom.py saturation policy)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,12 +85,12 @@ from biz_crawlers_spark.engine.stage import (
     make_stage,
 )
 from biz_crawlers_spark.filters.bloom import BloomShards
-from biz_crawlers_spark.filters.cuckoo import CuckooShards
 from biz_crawlers_spark.fixtures.web import SeedURL
 from biz_crawlers_spark.frontier.seed import (
     FRONTIER_DDL,
     IMAGES_DDL,
     LINEAGE_DDL,
+    ORDER_COLS,
     PAGES_DDL,
     RECORDS_CORRUPT_EXPR,
     RECORDS_DDL,
@@ -91,6 +105,60 @@ UNBOUNDED_BUDGET = 10**8  # budgets at/above this skip top-K selection
 # P8 robots cache table: rules is the JSON list politeness.robots.parse_robots
 # produces; fetched_epoch drives TTL re-fetch (robots_ttl_epochs)
 ROBOTS_DDL = "host string, rules string, fetched_epoch int"
+
+# epoch totals summed from the stats pass's per-(host, partition) groups
+TOTAL_KEYS = (
+    "fetched", "ok", "failed", "retried", "robots_denied", "not_found",
+    "images", "recs", "disc", "cache_hits",
+)
+
+# the local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
+
+@dataclass
+class EpochContext:
+    """What the phases of one epoch hand each other. ``frontier`` and
+    ``seen`` are the epoch-start snapshots (a SnapTable read pins its file
+    list, so concurrent commits never change what they return)."""
+
+    epoch: int
+    frontier: DataFrame | None = None
+    seen: DataFrame | None = None
+    checked: DataFrame | None = None  # persisted: selection + maybe_seen
+    batch: DataFrame | None = None  # persisted: the rows to fetch
+    dup_keys: DataFrame | None = None  # selected rows already seen
+    n_selected: int = 0
+    n_batch: int = 0
+    n_missing_hosts: int = 0
+    drained: bool = False
+    staging: str | None = None
+    fetched: DataFrame | None = None  # the staging output, read back
+    groups: list = field(default_factory=list)
+    totals: dict = field(default_factory=lambda: dict.fromkeys(TOTAL_KEYS, 0))
+    phase_sec: dict = field(default_factory=dict)
+    payload_paths: dict = field(default_factory=dict)
+
+    @property
+    def n_deduped(self) -> int:
+        return self.n_selected - self.n_batch
+
+    def rows(self, row_type: str) -> DataFrame:
+        # staging is partitioned by row_type: this filter is partition pruning
+        return self.fetched.filter(F.col("row_type") == row_type)
+
+    def terminal_ok(self) -> DataFrame:
+        """Status rows that make a key seen."""
+        return self.rows("status").filter(
+            F.col("status").isin("ok", "not_found", "cached")
+        )
+
+    def dup_done(self) -> DataFrame:
+        # already-seen rows must leave the pending set THIS epoch (not linger
+        # to be re-selected and re-deduped every remaining epoch)
+        return self.dup_keys.select("url_key", F.lit("done").alias("state"))
 
 
 class CrawlEngine:
@@ -121,7 +189,7 @@ class CrawlEngine:
         additionally salts by pmod(url_key, S): the 80%-one-host skew spreads
         over S lanes so CPU scaling measures the engine, not one task. Crawl
         ORDER is unaffected either way — it is defined by the deterministic
-        sort key, not by worker arrival (see run_epoch's order_log)."""
+        sort key, not by worker arrival (see c_order_log)."""
         self.spark = spark
         self.workdir = workdir.rstrip("/")
         self.web_params = web_params or {}
@@ -157,7 +225,7 @@ class CrawlEngine:
                 # resume on a workdir created by an OLDER engine version:
                 # migrate the stored meta to the current schema (added
                 # columns read as NULL from legacy files; derived columns
-                # are healed on read — snaptable.ensure_meta / ADVICE r3)
+                # are healed on read — snaptable.ensure_meta)
                 t.ensure_meta(
                     ddl,
                     derived=extra.get("derived"),
@@ -167,9 +235,9 @@ class CrawlEngine:
                 return t
             return SnapTable.create(spark, p, ddl, keys, n_buckets=table_buckets, **extra)
 
-        # state-partitioned storage (VERDICT r4 #7): frontier files are laid
-        # out by (bucket, state), so the epoch-end merge — whose matched keys
-        # are all currently-pending by construction — rewrites ONLY pending
+        # state-partitioned storage: frontier files are laid out by
+        # (bucket, state), so the epoch-end merge — whose matched keys are
+        # all currently-pending by construction — rewrites ONLY pending
         # files; the accumulated done/denied/failed history is carried over
         # untouched and c_frontier stays O(batch) over a long campaign
         self.frontier = tbl("frontier", FRONTIER_DDL, ["url_key"], part_col="state")
@@ -198,20 +266,19 @@ class CrawlEngine:
         )
         # Payload-key Blooms gate the zero-copy adopt's matched-key check:
         # probing the batch keys against a maintained Bloom is O(batch),
-        # where the raw-key scan it replaces reads the key column of EVERY
-        # table file each epoch (the one remaining O(table) term the
-        # sustained campaign measured — c_images/c_records stepping from
-        # 4/10 s on an empty store to ~19 s at 10^7 rows). Safety argument:
-        # a FALSE POSITIVE "matched" key merely lands in the equality-delete
-        # entry — every delete key comes from the batch, so its new row
-        # (file seq == delete seq) always survives, and with no older row
-        # the delete is a no-op. FALSE NEGATIVES cannot occur because every
-        # key ever committed to the table is added to the Bloom in the same
-        # commit member (and Blooms have no false negatives); keys from
-        # rolled-back epochs linger as harmless extra positives. String keys
-        # probe via xxhash64 — a 64-bit hash collision is just another
-        # conservative positive. The exact raw-key scan is the test-side
-        # reference (tests/test_round5_ops.py).
+        # where a raw-key scan would read the key column of EVERY table
+        # file each epoch (an O(table) term: c_images/c_records stepping
+        # from 4/10 s on an empty store to ~19 s at 10^7 rows). Safety
+        # argument: a FALSE POSITIVE "matched" key merely lands in the
+        # equality-delete entry — every delete key comes from the batch, so
+        # its new row (file seq == delete seq) always survives, and with no
+        # older row the delete is a no-op. FALSE NEGATIVES cannot occur
+        # because every key ever committed to the table is added to the
+        # Bloom in the same commit member (and Blooms have no false
+        # negatives); keys from rolled-back epochs linger as harmless extra
+        # positives. String keys probe via xxhash64 — a 64-bit hash
+        # collision is just another conservative positive. The exact
+        # raw-key scan is the test-side reference (tests/test_round5_ops.py).
         self._payload_keyblooms: dict[str, BloomShards] = {}
         for part, table, key in (
             ("image", self.images, "image_id"),
@@ -266,26 +333,17 @@ class CrawlEngine:
     def current_epoch(self) -> int:
         return self._read_state()["epoch"]
 
-    def _seen_cuckoo(self) -> CuckooShards | None:
-        """The deletable seen-set mirror, if the repair job has built it
-        (engine/repair.py cuckoo_mirror). Kept in sync per epoch commit."""
-        p = os.path.join(self.workdir, "seen_cuckoo")
-        return CuckooShards(p) if CuckooShards.exists(p) else None
-
-    def _maybe_rebuild_keybloom(
-        self, keybloom: "BloomShards", table: SnapTable, key: str
-    ) -> None:
-        """Saturation policy for a payload-key Bloom (same contract as the
-        seen-set Bloom): when the max shard fill crosses the threshold,
-        rebuild into a larger bit space from the table's durable raw keys —
-        the rare amortized O(table) pass that keeps the per-epoch probe
-        O(batch) forever. Superseded keys in the raw superset are harmless
-        extra positives."""
-        if keybloom.fill_ratio() > self.bloom_rebuild_fill:
-            keybloom.rebuild_spark(
-                table.read_keys_raw().select(F.xxhash64(F.col(key)).alias("_kh")),
-                "_kh",
-            )
+    def _rebuild_if_saturated(self, bloom: BloomShards, keys, key_col: str) -> None:
+        """Saturation policy, shared by the seen-set Bloom and the
+        payload-key Blooms: when the max shard fill (an O(1) version-meta
+        read) crosses ``bloom_rebuild_fill``, rebuild into a larger bit
+        space from ``keys()`` — the durable key set — as its own version.
+        This rare amortized O(table) pass keeps the per-epoch probe O(batch)
+        forever; rollback via the state record still lands on intact older
+        versions. ``keys`` is a callable so the key scan is only planned
+        when a rebuild runs."""
+        if bloom.fill_ratio() > self.bloom_rebuild_fill:
+            bloom.rebuild_spark(keys(), key_col)
 
     def _record_state(self, epoch: int) -> None:
         state = {
@@ -301,9 +359,6 @@ class CrawlEngine:
                 for n, kb in self._payload_keyblooms.items()
             },
         }
-        cf = self._seen_cuckoo()
-        if cf is not None:
-            state["cuckoo_version"] = cf.current_version()
         SnapTable._atomic_write(self._state_path(), json.dumps(state))
 
     # ---------- seeding / resume ----------
@@ -317,8 +372,7 @@ class CrawlEngine:
         fresh seeds (the long-campaign steady state) take the pure-append
         path — O(seeds) WRITES plus one narrow O(table-files) key-column
         scan for matched-key discovery (seeds may match any frontier state,
-        so no source_parts pruning applies; ADVICE r5 — the earlier
-        'never O(frontier history)' claim overstated this)."""
+        so no source_parts pruning applies)."""
         self.frontier.merge(
             df, prefer="old", summary={"op": "seed"}, mostly_new=True
         )
@@ -375,11 +429,6 @@ class CrawlEngine:
         if bv is not None and self.bloom.current_version() > bv:
             self.bloom._write_pointer(self.bloom.path, bv)
             n_actions += 1
-        cf = self._seen_cuckoo()
-        cv = state.get("cuckoo_version")
-        if cf is not None and cv is not None and cf.current_version() > cv:
-            cf._write_pointer(cf.path, cv)
-            n_actions += 1
         fr = self.frontier.read()
         stuck = fr.filter(F.col("state") == "in_flight")
         n = stuck.count()
@@ -391,8 +440,6 @@ class CrawlEngine:
             self._record_state(state["epoch"])
         return n + n_actions
 
-    # ---------- robots ----------
-
     def _known_robots_hosts(self, epoch: int) -> DataFrame:
         """Hosts whose robots rules are cached AND inside the TTL window."""
         known = self.robots.read()
@@ -402,89 +449,85 @@ class CrawlEngine:
             )
         return known.select("host")
 
-    def _resolve_robots(self, batch: DataFrame, epoch: int) -> None:
-        """P8 at crawl scale: robots.txt resolution is a DISTRIBUTED
-        pre-pass. The batch's distinct hosts are anti-joined against the
-        robots SnapTable (TTL-filtered when robots_ttl_epochs is set); the
-        missing hosts fan out to a mapInPandas stage that fetches+parses
-        robots.txt in the workers (engine/stage.py make_robots_stage), and
-        the result MERGEs into the robots table. The driver does O(1) work
-        per epoch — submit one job — regardless of host count (the round-2
-        driver loop was O(hosts) serialized fetches). The robots table is in
-        the epoch's atomic commit group (TABLE_NAMES), so a crash re-fetches
-        cleanly.
-
-        Only called when the fused select_dedup aggregate already proved at
-        least one host is missing (VERDICT r3 #1b/#6): the steady state —
-        every host cached — plans ZERO robots jobs. The merge itself persists
-        the updates plan, so the fetch stage runs exactly once."""
-        missing = (
-            batch.select("host")
-            .dropDuplicates(["host"])
-            .join(self._known_robots_hosts(epoch), "host", "left_anti")
-        )
-        fetched = missing.repartition(self.fetch_partitions, "host").mapInPandas(
-            make_robots_stage(self.web_params), "host string, rules string"
-        )
-        self.robots.merge(
-            fetched.withColumn("fetched_epoch", F.lit(epoch)),
-            summary={"op": "robots", "epoch": epoch},
-            dedupe=False,  # hosts are distinct by construction
-            # anti-joined against the TTL-filtered known set → (nearly) all
-            # keys are new; expired re-fetches still overlay via the
-            # matched-key discovery pass (r06: shaves the join overlay)
-            mostly_new=True,
-        )
-
     # ---------- the epoch ----------
 
     def run_epoch(self) -> dict:
-        import time as _time
+        ep = EpochContext(self.current_epoch())
+        try:
+            self._run_grouped(ep, ep.phase_sec, self._select_dedup)
+            if ep.n_batch:
+                for phase in (self._robots, self._fetch_stage, self._stats_pass):
+                    self._run_grouped(ep, ep.phase_sec, phase)
+            if ep.n_batch or ep.n_deduped:
+                self._run_grouped(ep, ep.phase_sec, self._commits)
+        finally:
+            for df in (ep.checked, ep.batch):
+                if df is not None:
+                    df.unpersist()
+        t = ep.totals
+        return {
+            "epoch": ep.epoch, "selected": ep.n_selected, "deduped": ep.n_deduped,
+            "fetched": t["fetched"], "ok": t["ok"], "failed": t["failed"],
+            "robots_denied": t["robots_denied"], "not_found": t["not_found"],
+            "retried": t["retried"], "images": t["images"],
+            "discovered": t["disc"], "cache_hits": t["cache_hits"],
+            "drained": ep.drained, "phase_sec": ep.phase_sec,
+            "payload_paths": ep.payload_paths,
+        }
 
-        phase_sec: dict[str, float] = {}
-        _t0 = _time.monotonic()
+    def _run_grouped(self, ep: EpochContext, sink: dict, fn) -> None:
+        """The phase wrapper: run ``fn(ep)`` under a Spark job group named
+        after it (``_select_dedup`` → ``select_dedup``, ``c_seen`` →
+        ``c_seen``) and record its wall seconds in ``sink[name]``. Job-group
+        properties are thread-local and pool threads do not inherit them,
+        so the commit members call this inside their own threads; the
+        caller's properties are restored afterwards."""
+        name = fn.__name__.lstrip("_")
+        sc = self.spark.sparkContext
+        prev = [sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS]
+        sc.setJobGroup(name, f"{name} epoch {ep.epoch}")
+        t0 = time.monotonic()
+        try:
+            fn(ep)
+        finally:
+            sink[name] = round(time.monotonic() - t0, 3)
+            for p, v in zip(_JOB_GROUP_PROPS, prev):
+                sc.setLocalProperty(p, v)
 
-        def _mark(name: str) -> None:
-            nonlocal _t0
-            now = _time.monotonic()
-            phase_sec[name] = round(phase_sec.get(name, 0.0) + (now - _t0), 3)
-            _t0 = now
-
-        epoch = self.current_epoch()
-        fr = self.frontier.read()
-        pending = fr.filter((F.col("state") == "pending") & (F.col("not_before") <= epoch))
+    def _select_dedup(self, ep: EpochContext) -> None:
+        epoch = ep.epoch
+        ep.frontier = self.frontier.read()
+        pending = ep.frontier.filter(
+            (F.col("state") == "pending") & (F.col("not_before") <= epoch)
+        )
         # the frontier is key-unique (SnapTable merge invariant) and a key
         # has one host, so the top-K needs no dedup shuffle after it
         if self.per_host_budget >= UNBOUNDED_BUDGET:
-            # fast path: an unbindable budget makes top-K a no-op — skip the
-            # two-phase selection
+            # an unbindable budget makes top-K a no-op — skip the selection
             selected = pending
         else:
             selected = select_per_host_topk(pending, self.per_host_budget)
 
         # dedup: Bloom prefilter, exact anti-join only on positives (§4.1).
-        # Empty-seen fast path (r06): on a fresh workdir's first epoch the
-        # seen set is empty, so NOTHING can be a duplicate — the Bloom probe
-        # (a shard shuffle over the whole selection) is skipped and every
-        # row is declared a negative. Identical semantics even when the
-        # Bloom carries lingering rolled-back keys: those positives would
-        # anti-join an EMPTY seen table straight back into the batch anyway
-        # (and in TTL mode _last_seen is null → not fresh → survivor).
-        seen_df = self.seen.read()
+        # Empty-seen fast path: on a fresh workdir's first epoch the seen set
+        # is empty, so NOTHING can be a duplicate — the Bloom probe (a shard
+        # shuffle over the whole selection) is skipped and every row is
+        # declared a negative. Identical semantics even when the Bloom
+        # carries lingering rolled-back keys: those positives would anti-join
+        # an EMPTY seen table straight back into the batch anyway (and in
+        # TTL mode _last_seen is null → not fresh → survivor).
+        ep.seen = self.seen.read()
         if self.seen.is_empty():
-            checked = selected.withColumn("maybe_seen", F.lit(False)).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+            checked = selected.withColumn("maybe_seen", F.lit(False))
         else:
-            checked = self.bloom.prefilter_spark(selected, "url_key").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        n_selected = checked.count()
-        negatives = checked.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        positives = checked.filter(F.col("maybe_seen")).drop("maybe_seen")
+            checked = self.bloom.prefilter_spark(selected, "url_key")
+        ep.checked = checked.persist(StorageLevel.MEMORY_AND_DISK)
+        ep.n_selected = ep.checked.count()
+        negatives = ep.checked.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        positives = ep.checked.filter(F.col("maybe_seen")).drop("maybe_seen")
         if self.ttl_epochs is None:
-            survivors = positives.join(seen_df, on="url_key", how="left_anti")
-            dup_keys = positives.join(seen_df, "url_key", "left_semi")
+            survivors = positives.join(ep.seen, on="url_key", how="left_anti")
+            ep.dup_keys = positives.join(ep.seen, "url_key", "left_semi")
         else:
             # D7 TTL mode: a key is a duplicate only while its LATEST seen
             # epoch is inside the recency window — stale keys re-fetch (the
@@ -494,9 +537,8 @@ class CrawlEngine:
             # every records write) read through manifest-stats pruning: when
             # no data file can contain a corrupt row — the steady state —
             # the probe costs zero scans and the join branch is not planned
-            # at all (the round-2 version try_parse_json-scanned the whole
-            # records table every TTL epoch).
-            last_seen = seen_df.groupBy("url_key").agg(
+            # at all.
+            last_seen = ep.seen.groupBy("url_key").agg(
                 F.max("seen_epoch").alias("_last_seen")
             )
             corrupt_src = self.records.read_stats_pruned("corrupt")
@@ -515,16 +557,16 @@ class CrawlEngine:
                 fresh = fresh & F.col("_corrupt").isNull()
                 drop_cols.append("_corrupt")
             survivors = j.filter(~fresh).drop(*drop_cols)
-            dup_keys = j.filter(fresh).drop(*drop_cols)
-        batch = negatives.unionByName(survivors).persist(StorageLevel.MEMORY_AND_DISK)
+            ep.dup_keys = j.filter(fresh).drop(*drop_cols)
+        ep.batch = negatives.unionByName(survivors).persist(StorageLevel.MEMORY_AND_DISK)
         # ONE job materializes the batch into the persist, counts it, AND
-        # counts the hosts missing from the robots cache (VERDICT r3 #1b/#6):
-        # the per-host partial agg keeps the extra shuffle O(hosts ×
-        # partitions), and an epoch where every host is already cached — the
-        # steady state — plans zero robots jobs afterwards.
+        # counts the hosts missing from the robots cache: the per-host
+        # partial agg keeps the extra shuffle O(hosts × partitions), and an
+        # epoch where every host is already cached — the steady state —
+        # plans zero robots jobs afterwards.
         known_hosts = self._known_robots_hosts(epoch).withColumn("_rk", F.lit(True))
         agg = (
-            batch.groupBy("host")
+            ep.batch.groupBy("host")
             .agg(F.count(F.lit(1)).alias("_n"))
             .join(known_hosts, "host", "left")
             .agg(
@@ -533,50 +575,54 @@ class CrawlEngine:
             )
             .collect()[0]
         )
-        n_batch = int(agg["n"] or 0)
-        n_missing_hosts = int(agg["miss"] or 0)
-        n_deduped = n_selected - n_batch
-        _mark("select_dedup")
-        # already-seen rows must leave the pending set THIS epoch (not linger
-        # to be re-selected and re-deduped every remaining epoch)
-        dup_done = dup_keys.select("url_key", F.lit("done").alias("state"))
-        if n_batch == 0:
-            stats = {"epoch": epoch, "selected": n_selected, "deduped": n_deduped,
-                     "fetched": 0, "ok": 0, "failed": 0, "robots_denied": 0,
-                     "not_found": 0, "images": 0, "retried": 0, "discovered": 0,
-                     "cache_hits": 0, "drained": pending.limit(1).count() == 0}
-            if n_deduped:
-                # mark the all-dup batch done so it leaves the pending set
-                self.frontier.merge(
-                    dup_done, summary={"op": "dedup_skip", "epoch": epoch},
-                    dedupe=False,
-                    source_parts=["pending"],  # dup keys were selected from pending
-                )
-                self._record_state(epoch + 1)
-                stats["drained"] = False
-            checked.unpersist()
-            batch.unpersist()
-            return stats
+        ep.n_batch = int(agg["n"] or 0)
+        ep.n_missing_hosts = int(agg["miss"] or 0)
+        if ep.n_selected == 0:
+            ep.drained = pending.limit(1).count() == 0
 
+    def _robots(self, ep: EpochContext) -> None:
+        """P8 at crawl scale: robots.txt resolution is a DISTRIBUTED
+        pre-pass. The batch's distinct hosts are anti-joined against the
+        robots SnapTable (TTL-filtered when robots_ttl_epochs is set); the
+        missing hosts fan out to a mapInPandas stage that fetches+parses
+        robots.txt in the workers (engine/stage.py make_robots_stage), and
+        the result MERGEs into the robots table. The driver does O(1) work
+        per epoch — submit one job — regardless of host count. The robots
+        table is in the epoch's atomic commit group (TABLE_NAMES), so a
+        crash re-fetches cleanly.
+
+        Runs only when select_dedup's fused aggregate proved at least one
+        host is missing: the steady state — every host cached — plans ZERO
+        robots jobs. The merge itself persists the updates plan, so the
+        fetch stage runs exactly once."""
+        if not ep.n_missing_hosts:
+            return
+        missing = (
+            ep.batch.select("host")
+            .dropDuplicates(["host"])
+            .join(self._known_robots_hosts(ep.epoch), "host", "left_anti")
+        )
+        fetched = missing.repartition(self.fetch_partitions, "host").mapInPandas(
+            make_robots_stage(self.web_params), "host string, rules string"
+        )
+        self.robots.merge(
+            fetched.withColumn("fetched_epoch", F.lit(ep.epoch)),
+            summary={"op": "robots", "epoch": ep.epoch},
+            dedupe=False,  # hosts are distinct by construction
+            # anti-joined against the TTL-filtered known set → (nearly) all
+            # keys are new; expired re-fetches still overlay via the
+            # matched-key discovery pass
+            mostly_new=True,
+        )
+
+    def _fetch_stage(self, ep: EpochContext) -> None:
         # Crash-safety needs no in_flight marking: selected rows keep
         # state='pending' until the epoch-end commit, so a crash mid-fetch
         # simply re-selects them on restart (commits are atomic snapshots,
         # and the epoch GROUP is atomic via the state record + resume()).
-        if n_missing_hosts:
-            # tagged with a job group so tests can listener-assert that a
-            # steady-state epoch submits zero robots jobs (VERDICT r3 #6)
-            sc = self.spark.sparkContext
-            sc.setJobGroup("robots", f"robots epoch {epoch}")
-            try:
-                self._resolve_robots(batch, epoch)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-        rules_df = self.robots.read().select("host", "rules")
-        _mark("robots")
-
+        #
         # fetch+extract — strict mode: partitioned BY HOST (global politeness
-        # pacing); throughput mode: salted lanes kill the hot-host skew.
+        # pacing); throughput mode: range lanes kill the hot-host skew.
         # The fused output lands in a staging PARQUET (not .persist()): the
         # epoch then reads it several times (statuses/images/records/
         # discovered/lineage) and columnar staging means every scan except
@@ -584,7 +630,7 @@ class CrawlEngine:
         # would deserialize the payload bytes on every scan. The staging dir
         # doubles as the raw-results archive of the epoch (K5 analog).
         stage = make_stage(
-            self.web_params, self.budget, self.archive_pages, epoch=epoch
+            self.web_params, self.budget, self.archive_pages, epoch=ep.epoch
         )
         # D9 routing join: batch rows whose key is in the raw-page archive
         # carry the archived body into the fetch stage, which re-parses it
@@ -592,12 +638,12 @@ class CrawlEngine:
         # always fetch (the reference caches detail pages, and the two-hop
         # child fetch cannot run from cache). Cached rows ride the same
         # lanes and are numbered in the host's sequence like fetched rows.
-        to_fetch = batch
+        to_fetch = ep.batch
         if self.archive_pages and not self.pages.is_empty():
             arch = self.pages.read().filter(F.col("status") == "ok").select(
                 "url_key", "body"
             )
-            to_fetch = batch.join(arch, "url_key", "left").withColumn(
+            to_fetch = to_fetch.join(arch, "url_key", "left").withColumn(
                 "body",
                 F.when(~F.col("canonical_url").contains("/search"), F.col("body")),
             )
@@ -605,24 +651,23 @@ class CrawlEngine:
         # host per partition in-stage): a broadcast join for small robots
         # tables, a host-hash shuffle join at 10^6-host scale — never a
         # driver-side dict
-        to_fetch = to_fetch.join(rules_df, "host", "left")
-        # Lane layout (round-5 rework — VERDICT r4 #2): throughput mode uses
-        # RANGE lanes on (host, order key) instead of hash-salted lanes.
-        # Range partitioning (a) balances the 80%-skew host by SAMPLED row
-        # counts — no S>>P oversampling against balls-in-bins collisions —
-        # and (b) makes each host's lanes CONTIGUOUS in order-key space, so
-        # the per-partition host_seq the stage already emits composes into
-        # the global per-host crawl order with nothing but per-(partition,
-        # host) offsets, which the epoch's ONE stats pass collects anyway.
-        # _c_order_log then degenerates to a narrow staging scan + broadcast
-        # offsets join — no batch re-join, no extra shuffle, no sort job.
-        # Strict mode keeps hash-by-host (politeness pacing globally
-        # correct); there a host never straddles partitions, so its offset
-        # is just 0. Both modes sort within partitions so the stage's
-        # arrival order IS the deterministic order key (crawl ORDER is
-        # unchanged — order-parity tests pin this).
-        from biz_crawlers_spark.frontier.seed import ORDER_COLS
-
+        to_fetch = to_fetch.join(
+            self.robots.read().select("host", "rules"), "host", "left"
+        )
+        # Lane layout: throughput mode uses RANGE lanes on (host, order key)
+        # instead of hash-salted lanes. Range partitioning (a) balances the
+        # 80%-skew host by SAMPLED row counts — no S>>P oversampling against
+        # balls-in-bins collisions — and (b) makes each host's lanes
+        # CONTIGUOUS in order-key space, so the per-partition host_seq the
+        # stage already emits composes into the global per-host crawl order
+        # with nothing but per-(partition, host) offsets, which the epoch's
+        # ONE stats pass collects anyway. c_order_log then degenerates to a
+        # narrow staging scan + broadcast offsets join — no batch re-join, no
+        # extra shuffle, no sort job. Strict mode keeps hash-by-host
+        # (politeness pacing globally correct); there a host never straddles
+        # partitions, so its offset is just 0. Both modes sort within
+        # partitions so the stage's arrival order IS the deterministic order
+        # key (crawl ORDER is unchanged — order-parity tests pin this).
         if self.fetch_salting > 0:
             lanes = to_fetch.repartitionByRange(
                 self.fetch_partitions, "host", *ORDER_COLS
@@ -632,33 +677,26 @@ class CrawlEngine:
         fetched_df = lanes.sortWithinPartitions("host", *ORDER_COLS).mapInPandas(
             stage, STAGE_DDL
         )
-        staging = os.path.join(self.workdir, "staging", f"epoch={epoch}")
+        ep.staging = os.path.join(self.workdir, "staging", f"epoch={ep.epoch}")
         # staging is PARTITIONED BY row_type: (a) every downstream read
         # filters on row_type, which becomes partition pruning — the commit
         # jobs never even open each other's files (this is also what makes
         # the zero-copy adopt safe under concurrent commits); (b) the
         # image/record partitions are pure payload files the payload tables
         # ADOPT by rename — the epoch's bytes are written exactly once
-        fetched_df.write.mode("overwrite").partitionBy("row_type").parquet(staging)
-        fetched = self.spark.read.parquet(staging)
-        _mark("fetch_stage")
+        fetched_df.write.mode("overwrite").partitionBy("row_type").parquet(ep.staging)
+        ep.fetched = self.spark.read.parquet(ep.staging)
 
-        statuses = fetched.filter(F.col("row_type") == "status")
-        images = fetched.filter(F.col("row_type") == "image")
-        records = fetched.filter(F.col("row_type") == "record")
-        discovered = fetched.filter(F.col("row_type") == "discovered")
-
-        # ONE stats pass over staging — run FIRST: the collected group rows
-        # (O(hosts × partitions), tiny) yield the lineage table rows, the
-        # epoch totals, AND the counts that let the commit section skip
-        # whole plan branches (no discovery → no frontier anti-join; no
-        # duplicates → no dedup-done union) — replacing the round-1 fan-out
-        # of separate lineage-agg, image-count-join, global-agg, and
-        # discovery-count jobs (4 staging scans → 1).
+    def _stats_pass(self, ep: EpochContext) -> None:
+        # ONE stats pass over staging — run before the commits: the collected
+        # group rows (O(hosts × partitions), tiny) yield the lineage table
+        # rows, the epoch totals, AND the counts that let the commit section
+        # skip whole plan branches (no discovery → no frontier anti-join; no
+        # duplicates → no dedup-done union) in one staging scan.
         is_status = F.col("row_type") == "status"
         st = F.when(is_status, F.col("status"))
-        groups = (
-            fetched.groupBy("host", "partition_id")
+        ep.groups = (
+            ep.fetched.groupBy("host", "partition_id")
             .agg(
                 F.sum(
                     (is_status & ~st.isin("robots_denied", "cached")).cast("long")
@@ -682,242 +720,233 @@ class CrawlEngine:
                 # partition-local host_seq): their per-(host, partition)
                 # counts are exactly the offsets that turn the stage's local
                 # sequence into the global per-host crawl order (see
-                # _c_order_log) — collected for free in this same pass
+                # c_order_log) — collected for free in this same pass
                 F.sum(
                     (is_status & F.col("host_seq").isNotNull()).cast("long")
                 ).alias("n_ord"),
             )
             .collect()
         )
-        _mark("stats_pass")
-        totals = {
-            k: int(sum(r[k] for r in groups))
-            for k in ("fetched", "ok", "failed", "retried", "robots_denied",
-                      "not_found", "images", "recs", "disc", "cache_hits")
-        }
-        n_discovered = totals["disc"]
-        n_images = totals["images"]
+        ep.totals = {k: int(sum(r[k] for r in ep.groups)) for k in TOTAL_KEYS}
 
-        # --- commits ---
-        # Per-table commits are atomic; the GROUP is made atomic by the state
-        # record written at the end (resume() rolls back any table that is
-        # ahead of the record, so a crash anywhere in this sequence re-runs
-        # the epoch in full — no seen rows without evidence rows, ADVICE r1).
-        # The commits are INDEPENDENT (distinct tables/dirs, all reading the
-        # immutable staging output), so they are submitted CONCURRENTLY from
-        # driver threads — Spark schedules the jobs in parallel and the
-        # epoch's commit tail collapses from a sum of job latencies to their
-        # max. Any failure aborts the epoch before the state record, so the
-        # group stays atomic.
-        img_rows = images.select(
+    # ---------- commits ----------
+    #
+    # Per-table commits are atomic; the GROUP is made atomic by the state
+    # record written at the end (resume() rolls back any table that is ahead
+    # of the record, so a crash anywhere in the commits re-runs the epoch in
+    # full — no seen rows without evidence rows). The members are
+    # INDEPENDENT (distinct tables/dirs, all reading the immutable staging
+    # output; lockstep of seen table and Bloom is guaranteed by the state
+    # record, not by sequencing), so they are submitted CONCURRENTLY from
+    # driver threads — Spark schedules the jobs in parallel and the epoch's
+    # commit tail collapses from a sum of job latencies to their max. Any
+    # failure aborts the epoch before the state record, so the group stays
+    # atomic.
+
+    COMMIT_MEMBERS = (
+        "c_images", "c_records", "c_seen", "c_bloom", "c_frontier",
+        "c_order_log", "c_lineage",
+    )
+
+    def _commits(self, ep: EpochContext) -> None:
+        if not ep.n_batch:
+            # the all-duplicate batch leaves the pending set without a fetch
+            self.frontier.merge(
+                ep.dup_done(), summary={"op": "dedup_skip", "epoch": ep.epoch},
+                dedupe=False,
+                source_parts=["pending"],  # dup keys were selected from pending
+            )
+        else:
+            members = self.COMMIT_MEMBERS + (("c_pages",) if self.archive_pages else ())
+            breakdown = ep.phase_sec.setdefault("commit_breakdown", {})
+            with ThreadPoolExecutor(max_workers=len(members)) as ex:
+                futures = [
+                    ex.submit(self._run_grouped, ep, breakdown, getattr(self, m))
+                    for m in members
+                ]
+                for f in futures:
+                    f.result()  # re-raise: a failed member aborts the epoch
+            if not self.keep_staging:
+                shutil.rmtree(ep.staging, ignore_errors=True)
+        self._record_state(ep.epoch + 1)
+
+    # Payload tables are INSERT-HEAVY: at steady state nearly every
+    # image_id/entity_id is brand new. The FAST path is ZERO-COPY ADOPT: the
+    # staging write already produced pure image/record parquet files
+    # (row_type partitions, table column names, epoch + corrupt stamped
+    # in-stage), so after narrow key jobs find the batch's duplicate and
+    # matched keys, the commit just RENAMES those files in
+    # (SnapTable.adopt_files) — the payload bytes are written exactly once
+    # per epoch and the commit cost is O(files) metadata, independent of both
+    # batch and table size.
+
+    def c_images(self, ep: EpochContext) -> None:
+        rows = ep.rows("image").select(
             "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
             "url_key", "seq", "epoch",
         ).dropDuplicates(["image_id"])  # same bytes on two pages in one epoch
+        self._payload_commit(
+            ep, self.images, "image", rows, "image_id", ep.totals["images"]
+        )
 
-        rec_rows = records.select(
+    def c_records(self, ep: EpochContext) -> None:
+        rows = ep.rows("record").select(
             "entity_id", "entity_name", "entity_names", "address", "change_date",
             "biz_items", "shareholders", "managers", "capital", "parse_mode",
             "category", "url_key", "epoch", "corrupt",
         ).dropDuplicates(["entity_id"])
+        self._payload_commit(
+            ep, self.records, "record", rows, "entity_id", ep.totals["recs"]
+        )
 
-        term_ok = statuses.filter(F.col("status").isin("ok", "not_found", "cached"))
-        seen_rows = term_ok.select("url_key", F.lit(epoch).alias("seen_epoch"))
-
-        def _hint(n_rows: int, table: SnapTable) -> str | None:
-            # With n uniformly-hashed update keys over B buckets,
-            # P(some bucket untouched) <= B * (1 - 1/B)^n < B * e^(-n/B);
-            # at n >= 32·B that is < B·e^-32 ≈ never. Declaring every bucket
-            # touched lets the merge skip the touched-bucket discovery job
-            # AND the updates persist (the plan is consumed exactly once) —
-            # part of the VERDICT r3 #1 fixed-overhead cut. A false "all"
-            # only rewrites an unchanged bucket; never incorrect.
-            return "all" if n_rows >= 32 * table.n_buckets else None
-
-        # payload tables are INSERT-HEAVY (VERDICT r4 #7 / sustained-crawl
-        # fix): at steady state nearly every image_id/entity_id is brand
-        # new. The FAST path is ZERO-COPY ADOPT (VERDICT r4 #2): the
-        # staging write already produced pure image/record parquet files
-        # (row_type partitions, table column names, epoch + corrupt
-        # stamped in-stage), so after two narrow key jobs prove the batch
-        # is key-distinct AND disjoint from the table, the commit just
-        # RENAMES those files in (SnapTable.adopt_files) — the payload
-        # bytes are written exactly once per epoch and the commit cost is
-        # O(files) metadata, independent of both batch and table size.
-        # Any key collision (re-crawled image on another page, TTL
-        # re-crawls) falls back to the mostly_new merge, which pays the
-        # overlay only for genuinely matched buckets.
-        payload_paths: dict[str, str] = {}
-
-        def _payload_commit(
-            table: SnapTable, part_dir: str, df_rows, key: str, n_rows: int
-        ) -> None:
-            keybloom = self._payload_keyblooms[part_dir]
-            src = os.path.join(staging, f"row_type={part_dir}")
-            if not self.keep_staging and n_rows > 0 and os.path.isdir(src):
-                # ONE narrow key job yields the distinct count AND the
-                # in-batch duplicate keys (the old path computed only the
-                # distinct count from the same shuffle).
-                cnt = (
-                    fetched.filter(F.col("row_type") == part_dir)
-                    .groupBy(key)
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .withColumn("_kh", F.xxhash64(F.col(key)))
+    def _payload_commit(
+        self, ep: EpochContext, table: SnapTable, part_dir: str, df_rows,
+        key: str, n_rows: int,
+    ) -> None:
+        keybloom = self._payload_keyblooms[part_dir]
+        raw_keys = lambda: table.read_keys_raw().select(  # noqa: E731
+            F.xxhash64(F.col(key)).alias("_kh")
+        )
+        src = os.path.join(ep.staging, f"row_type={part_dir}")
+        if not self.keep_staging and n_rows > 0 and os.path.isdir(src):
+            # ONE narrow key job yields the distinct count AND the in-batch
+            # duplicate keys
+            cnt = (
+                ep.rows(part_dir)
+                .groupBy(key)
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .withColumn("_kh", F.xxhash64(F.col(key)))
+            )
+            # adopt RENAMES the staging files this plan reads, so every
+            # post-adopt use (dup keys, the Bloom add) must come from the
+            # cache — persist is materialized by the agg below
+            cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
+            patch_rows = None
+            gate = None
+            try:
+                agg = cnt.agg(
+                    F.count(F.lit(1)).alias("_nd"),
+                    F.coalesce(
+                        F.sum((F.col("_n") > 1).cast("long")), F.lit(0)
+                    ).alias("_ndup"),
+                ).first()
+                n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
+                if n_dist < n_rows:
+                    # ADOPT + PATCH: a few in-batch duplicate keys must not
+                    # force a full-batch byte rewrite (the MoR fallback
+                    # measured 2-3x the adopt commit: it re-writes the whole
+                    # image payload because ~100 of ~10^6 keys collided).
+                    # Materialize the duplicated keys' rows — already
+                    # key-distinct via df_rows' dropDuplicates — BEFORE the
+                    # rename; after the adopt they become a tiny MoR commit
+                    # whose higher-seq equality-delete entry supersedes every
+                    # adopted copy of those keys. Payload written: O(n_dup)
+                    # instead of O(batch); the dead adopted copies fold out
+                    # at the vacuum/compaction cadence.
+                    dup_keys = cnt.filter(F.col("_n") > 1).select(key)
+                    patch_rows = df_rows.join(
+                        F.broadcast(dup_keys), key, "left_semi"
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+                    patch_rows.count()  # materialize before the rename
+                # zero-copy adopt regardless of cross-epoch matches: matched
+                # keys become an equality-delete entry riding the same
+                # commit, found by probing the batch keys against the
+                # maintained payload-key Bloom — O(batch), a conservative
+                # superset (false positives are harmless no-op deletes, see
+                # __init__). FUSED probe+insert: one shard shuffle yields the
+                # membership test AND the Bloom add; the add landing even if
+                # a later step aborts the epoch is the documented
+                # harmless-lingering-positive case.
+                files = [
+                    os.path.join(src, fn)
+                    for fn in os.listdir(src)
+                    if fn.endswith(".parquet")
+                ]
+                gate = keybloom.check_add_spark(cnt, "_kh")
+                matched = None
+                n_matched = 0
+                if not table.is_empty():
+                    matched = gate.filter(F.col("maybe_seen")).select(key)
+                    n_matched = matched.count()
+                table.adopt_files(
+                    files,
+                    summary={
+                        "epoch": ep.epoch, "adopted": True,
+                        "matched": n_matched, "patched": n_dup,
+                    },
+                    delete_keys_df=matched if n_matched else None,
                 )
-                # adopt RENAMES the staging files this plan reads, so every
-                # post-adopt use (dup keys, the Bloom add) must come from
-                # the cache — persist is materialized by the agg below
-                cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
-                patch_rows = None
-                gate = None
-                try:
-                    agg = cnt.agg(
-                        F.count(F.lit(1)).alias("_nd"),
-                        F.coalesce(
-                            F.sum((F.col("_n") > 1).cast("long")), F.lit(0)
-                        ).alias("_ndup"),
-                    ).first()
-                    n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
-                    if n_dist < n_rows:
-                        # ADOPT + PATCH: a few in-batch duplicate keys must
-                        # not force a full-batch byte rewrite (the sustained
-                        # campaign measured the MoR fallback at 2-3x the
-                        # adopt commit: it re-writes the whole image payload
-                        # because ~100 of ~10^6 keys collided). Materialize
-                        # the duplicated keys' rows — already key-distinct
-                        # via df_rows' dropDuplicates — BEFORE the rename;
-                        # after the adopt they become a tiny MoR commit
-                        # whose higher-seq equality-delete entry supersedes
-                        # every adopted copy of those keys. Payload written:
-                        # O(n_dup) instead of O(batch); the dead adopted
-                        # copies fold out at the vacuum/compaction cadence.
-                        dup_keys = cnt.filter(F.col("_n") > 1).select(key)
-                        patch_rows = df_rows.join(
-                            F.broadcast(dup_keys), key, "left_semi"
-                        ).persist(StorageLevel.MEMORY_AND_DISK)
-                        patch_rows.count()  # materialize before the rename
-                    # zero-copy adopt regardless of cross-epoch matches:
-                    # matched keys become an equality-delete entry riding
-                    # the same commit, found by probing the batch keys
-                    # against the maintained payload-key Bloom — O(batch),
-                    # a conservative superset (false positives are harmless
-                    # no-op deletes, see __init__). FUSED probe+insert: one
-                    # shard shuffle yields the membership test AND the Bloom
-                    # add; the add landing even if a later step aborts the
-                    # epoch is the documented harmless-lingering-positive
-                    # case.
-                    files = [
-                        os.path.join(src, fn)
-                        for fn in os.listdir(src)
-                        if fn.endswith(".parquet")
-                    ]
-                    gate = keybloom.check_add_spark(cnt, "_kh")
-                    matched = None
-                    n_matched = 0
-                    if not table.is_empty():
-                        matched = gate.filter(F.col("maybe_seen")).select(key)
-                        n_matched = matched.count()
-                    table.adopt_files(
-                        files,
-                        summary={
-                            "epoch": epoch, "adopted": True,
-                            "matched": n_matched, "patched": n_dup,
-                        },
-                        delete_keys_df=matched if n_matched else None,
+                if patch_rows is not None:
+                    table.merge(
+                        patch_rows,
+                        summary={"epoch": ep.epoch, "mor": True, "patch": True},
+                        dedupe=False, mor=True, insert_direct=True,
                     )
-                    if patch_rows is not None:
-                        table.merge(
-                            patch_rows,
-                            summary={"epoch": epoch, "mor": True, "patch": True},
-                            dedupe=False, mor=True, insert_direct=True,
-                        )
-                    self._maybe_rebuild_keybloom(keybloom, table, key)
-                    payload_paths[part_dir] = (
-                        "adopt" if patch_rows is None else "adopt_patch"
-                    )
-                    return
-                finally:
-                    if gate is not None:
-                        gate.unpersist()
-                    cnt.unpersist()
-                    if patch_rows is not None:
-                        patch_rows.unpersist()
-            # fallback (keep_staging, or an empty or absent staging
-            # partition): the full-batch MERGE-ON-READ upsert — append
-            # O(batch) + an equality-delete entry; never an O(table)
-            # rewrite (refresh crawls re-crawl whole epochs). The read tax
-            # is folded back by the vacuum compaction cadence.
-            table.merge(
-                df_rows, summary={"epoch": epoch, "mor": True}, dedupe=False,
-                mor=True, insert_direct=True,
-            )
-            if n_rows > 0:
-                keybloom.add_spark(
-                    df_rows.select(F.xxhash64(F.col(key)).alias("_kh")), "_kh"
+                self._rebuild_if_saturated(keybloom, raw_keys, "_kh")
+                ep.payload_paths[part_dir] = (
+                    "adopt" if patch_rows is None else "adopt_patch"
                 )
-                self._maybe_rebuild_keybloom(keybloom, table, key)
-            payload_paths[part_dir] = "mor"
-
-        def _c_images() -> None:
-            _payload_commit(
-                self.images, "image", img_rows, "image_id", totals["images"]
+                return
+            finally:
+                if gate is not None:
+                    gate.unpersist()
+                cnt.unpersist()
+                if patch_rows is not None:
+                    patch_rows.unpersist()
+        # fallback (keep_staging, or an empty or absent staging partition):
+        # the full-batch MERGE-ON-READ upsert — append O(batch) + an
+        # equality-delete entry; never an O(table) rewrite (refresh crawls
+        # re-crawl whole epochs). The read tax is folded back by the vacuum
+        # compaction cadence.
+        table.merge(
+            df_rows, summary={"epoch": ep.epoch, "mor": True}, dedupe=False,
+            mor=True, insert_direct=True,
+        )
+        if n_rows > 0:
+            keybloom.add_spark(
+                df_rows.select(F.xxhash64(F.col(key)).alias("_kh")), "_kh"
             )
+            self._rebuild_if_saturated(keybloom, raw_keys, "_kh")
+        ep.payload_paths[part_dir] = "mor"
 
-        def _c_records() -> None:
-            _payload_commit(
-                self.records, "record", rec_rows, "entity_id", totals["recs"]
+    def c_pages(self, ep: EpochContext) -> None:
+        page_rows = (
+            ep.rows("page")
+            .select(
+                "url_key", "status", F.col("bytes").alias("body"),
+                F.lit(ep.epoch).alias("epoch"),
             )
+            .dropDuplicates(["url_key"])
+        )
+        # MoR upsert: re-archived bodies (TTL re-crawls) supersede by key at
+        # read time — O(batch) write, never an O(table) rewrite
+        self.pages.merge(
+            page_rows, summary={"epoch": ep.epoch}, dedupe=False, mor=True,
+            insert_direct=True,
+        )
 
-        def _c_pages() -> None:
-            page_rows = (
-                fetched.filter(F.col("row_type") == "page")
-                .select(
-                    "url_key", "status", F.col("bytes").alias("body"),
-                    F.lit(epoch).alias("epoch"),
-                )
-                .dropDuplicates(["url_key"])
-            )
-            # MoR upsert: re-archived bodies (TTL re-crawls) supersede by
-            # key at read time — O(batch) write, never an O(table) rewrite
-            self.pages.merge(
-                page_rows, summary={"epoch": epoch}, dedupe=False, mor=True,
-                insert_direct=True,
-            )
+    def c_seen(self, ep: EpochContext) -> None:
+        self.seen.append(
+            ep.terminal_ok().select("url_key", F.lit(ep.epoch).alias("seen_epoch")),
+            summary={"epoch": ep.epoch},
+        )
 
-        # seen table, Bloom shards, and cuckoo mirror are INDEPENDENT
-        # structures (distinct directories, all reading immutable staging);
-        # lockstep is guaranteed by the state record, not by sequencing —
-        # so they commit concurrently like every other table (round-2 ran
-        # them as one serial chain inside a single commit thread)
-        def _c_seen() -> None:
-            self.seen.append(seen_rows, summary={"epoch": epoch})
+    def c_bloom(self, ep: EpochContext) -> None:
+        keys = ep.terminal_ok().select("url_key")
+        self.bloom.add_spark(keys, "url_key")
+        # the rebuild source is the durable seen set as of this commit: the
+        # epoch-start seen snapshot plus this epoch's terminal keys —
+        # deterministic regardless of the concurrent c_seen commit's timing
+        self._rebuild_if_saturated(
+            self.bloom, lambda: ep.seen.select("url_key").unionByName(keys), "url_key"
+        )
 
-        def _c_bloom() -> None:
-            self.bloom.add_spark(term_ok.select("url_key"), "url_key")
-            # saturation policy (VERDICT r4 #4): when the max shard fill
-            # crosses the threshold (O(1) vmeta read), rebuild into a larger
-            # bit space from the durable seen set — this epoch's terminal
-            # keys plus the epoch-start seen snapshot (deterministic
-            # regardless of the concurrent _c_seen commit's timing). The
-            # rebuild is its own version; rollback via the state record
-            # still lands on intact older versions.
-            if self.bloom.fill_ratio() > self.bloom_rebuild_fill:
-                self.bloom.rebuild_spark(
-                    seen_df.select("url_key").unionByName(
-                        seen_rows.select("url_key")
-                    ),
-                    "url_key",
-                )
-
-        def _c_cuckoo() -> None:
-            cf = self._seen_cuckoo()
-            if cf is not None:  # keep the deletable mirror in lockstep (D6)
-                cf.add_spark(term_ok.select("url_key"), "url_key")
-
-        # frontier: ONE fused merge — fetched-state transitions + dedup-done
-        # marks + discovered inserts. State transitions apply to FRONTIER
-        # rows only; two-hop detail fetches (parent_key set) are derived
-        # requests — seen-tracked and lineage-counted but never frontier rows.
-        state_upd = statuses.filter(F.col("parent_key").isNull()).select(
+    def c_frontier(self, ep: EpochContext) -> None:
+        # ONE fused merge — fetched-state transitions + dedup-done marks +
+        # discovered inserts. State transitions apply to FRONTIER rows only;
+        # two-hop detail fetches (parent_key set) are derived requests —
+        # seen-tracked and lineage-counted but never frontier rows.
+        updates = ep.rows("status").filter(F.col("parent_key").isNull()).select(
             "url_key",
             F.when(F.col("status").isin("ok", "not_found", "cached"), "done")
             .when(F.col("status") == "robots_denied", "denied")
@@ -925,13 +954,13 @@ class CrawlEngine:
             .alias("state"),
             F.col("attempts").alias("retries"),
         )
-        frontier_updates = state_upd
+        n_discovered = ep.totals["disc"]
         if n_discovered:
             # F4 discoveries stay distributed: url_key/host/page derived with
             # column expressions from the (already canonical) discovered_url —
             # no driver collect, no createDataFrame round-trip
             ndf = (
-                discovered.select(
+                ep.rows("discovered").select(
                     F.xxhash64("discovered_url").alias("url_key"),
                     F.col("discovered_url").alias("canonical_url"),
                     F.lower(F.parse_url("discovered_url", F.lit("HOST"))).alias("host"),
@@ -947,153 +976,100 @@ class CrawlEngine:
                     F.coalesce(F.col("priority"), F.lit(0)).alias("priority"),
                     F.lit("pending").alias("state"),
                     F.lit(0).alias("retries"),
-                    F.lit(epoch + 1).alias("not_before"),
-                    F.lit(epoch + 1).alias("discovered_epoch"),
+                    F.lit(ep.epoch + 1).alias("not_before"),
+                    F.lit(ep.epoch + 1).alias("discovered_epoch"),
                 )
                 .dropDuplicates(["url_key"])
                 # re-discovered URLs never reset existing rows (insert-only)
-                .join(fr.select("url_key"), "url_key", "left_anti")
+                .join(ep.frontier.select("url_key"), "url_key", "left_anti")
             )
-            frontier_updates = ndf.unionByName(
-                frontier_updates, allowMissingColumns=True
-            )
-        if n_deduped:
-            frontier_updates = frontier_updates.unionByName(
-                dup_done, allowMissingColumns=True
-            )
-
-        def _c_frontier() -> None:
+            updates = ndf.unionByName(updates, allowMissingColumns=True)
+        if ep.n_deduped:
+            updates = updates.unionByName(ep.dup_done(), allowMissingColumns=True)
+        # With n uniformly-hashed update keys over B buckets,
+        # P(some bucket untouched) <= B * (1 - 1/B)^n < B * e^(-n/B); at
+        # n >= 32·B that is < B·e^-32 ≈ never. Declaring every bucket touched
+        # lets the merge skip the touched-bucket discovery job AND the
+        # updates persist (the plan is consumed exactly once). A false "all"
+        # only rewrites an unchanged bucket; never incorrect.
+        n_upd = ep.n_batch + n_discovered + ep.n_deduped
+        self.frontier.merge(
+            updates, summary={"op": "epoch_end", "epoch": ep.epoch},
+            dedupe=False,  # all sources are key-unique by construction
+            touched_hint="all" if n_upd >= 32 * self.frontier.n_buckets else None,
             # source_parts contract: every MATCHED key is currently-pending
             # (transitions + dup marks come from this epoch's pending
             # selection; discovered rows are anti-joined new keys) — so only
             # pending-part files rewrite; the done history carries over
-            self.frontier.merge(
-                frontier_updates, summary={"op": "epoch_end", "epoch": epoch},
-                dedupe=False,  # all sources are key-unique by construction
-                touched_hint=_hint(
-                    n_batch + n_discovered + n_deduped, self.frontier
-                ),
-                source_parts=["pending"],
-                # cogroup overlay: pending rows move through ONE exchange
-                # (bucket-aligned) instead of join + writer repartition;
-                # frontier qualifies (url_key is its only 64-bit column and
-                # never null) — see SnapTable.merge docstring
-                strategy="cogroup",
-            )
+            source_parts=["pending"],
+        )
 
-        def _c_order_log() -> None:
-            # crawl-order evidence: per-host sequence of url_keys. host_seq
-            # is DERIVED from the deterministic order key, not from worker
-            # arrival — identical in strict and salted modes, and equal to
-            # the reference's sequential order per host (SURVEY.md §7).
-            #
-            # STAGED RANKING (round 5 — VERDICT r4 #2): the fetch stage
-            # receives rows sorted by (host, order key) within
-            # range-contiguous lanes, so the partition-local host_seq it
-            # already emits — for fetched, robots-denied AND cached rows —
-            # IS the per-host rank up to a per-(partition, host) offset, and
-            # those offsets are the n_ord counts the epoch's single stats
-            # pass collected. The order-log commit is then ONE narrow
-            # column-pruned staging scan, a broadcast join against the tiny
-            # offsets table (empty in strict mode: a host never straddles
-            # partitions there), and the append — no batch re-join, no
-            # range-sampling job, no sort, no persist. The offsets side is
-            # O(host-partition pairs that straddle a lane boundary); at 10^6
-            # hosts it stays O(hosts) rows — driver-built but broadcast once
-            # per executor, never captured per task.
-            per_host: dict[str, list] = {}
-            for r in groups:
-                if r["n_ord"]:
-                    per_host.setdefault(r["host"], []).append(
-                        (r["partition_id"], r["n_ord"])
-                    )
-            off_rows = []
-            for h, lst in per_host.items():
-                acc = 0
-                for pid, c in sorted(lst):
-                    if acc:
-                        off_rows.append((h, pid, acc))
-                    acc += c
-            ranked = statuses.filter(F.col("host_seq").isNotNull())
-            if off_rows:
-                off_df = self.spark.createDataFrame(
-                    off_rows, "host string, partition_id int, _off long"
+    def c_order_log(self, ep: EpochContext) -> None:
+        # crawl-order evidence: per-host sequence of url_keys. host_seq is
+        # DERIVED from the deterministic order key, not from worker arrival —
+        # identical in strict and salted modes, and equal to the reference's
+        # sequential order per host (SURVEY.md §7).
+        #
+        # STAGED RANKING: the fetch stage receives rows sorted by (host,
+        # order key) within range-contiguous lanes, so the partition-local
+        # host_seq it already emits — for fetched, robots-denied AND cached
+        # rows — IS the per-host rank up to a per-(partition, host) offset,
+        # and those offsets are the n_ord counts the stats pass collected.
+        # The order-log commit is then ONE narrow column-pruned staging scan,
+        # a broadcast join against the tiny offsets table (empty in strict
+        # mode: a host never straddles partitions there), and the append —
+        # no batch re-join, no range-sampling job, no sort, no persist. The
+        # offsets side is O(host-partition pairs that straddle a lane
+        # boundary); at 10^6 hosts it stays O(hosts) rows — driver-built but
+        # broadcast once per executor, never captured per task.
+        per_host: dict[str, list] = {}
+        for r in ep.groups:
+            if r["n_ord"]:
+                per_host.setdefault(r["host"], []).append(
+                    (r["partition_id"], r["n_ord"])
                 )
-                seq = (
-                    F.coalesce(F.col("_off"), F.lit(0)) + F.col("host_seq")
-                ).cast("long")
-                ranked = ranked.join(
-                    F.broadcast(off_df), ["host", "partition_id"], "left"
-                )
-            else:
-                seq = F.col("host_seq").cast("long")
-            self.order_log.append(
-                ranked.select(
-                    "url_key", "host", F.lit(epoch).alias("epoch"),
-                    seq.alias("host_seq"), "status", "attempts", "n_payload",
-                ),
-                summary={"epoch": epoch},
-                bucketize=False,  # append-only evidence table, never MERGEd
+        off_rows = []
+        for h, lst in per_host.items():
+            acc = 0
+            for pid, c in sorted(lst):
+                if acc:
+                    off_rows.append((h, pid, acc))
+                acc += c
+        ranked = ep.rows("status").filter(F.col("host_seq").isNotNull())
+        if off_rows:
+            off_df = self.spark.createDataFrame(
+                off_rows, "host string, partition_id int, _off long"
             )
-
-        def _c_lineage() -> None:
-            lineage_rows = self.spark.createDataFrame(
-                [
-                    (epoch, r["partition_id"], r["host"], r["fetched"], r["ok"], 0,
-                     r["failed"], r["retried"], r["robots_denied"], r["not_found"],
-                     r["images"], r["cache_hits"])
-                    for r in groups
-                ],
-                LINEAGE_DDL,
+            seq = (
+                F.coalesce(F.col("_off"), F.lit(0)) + F.col("host_seq")
+            ).cast("long")
+            ranked = ranked.join(
+                F.broadcast(off_df), ["host", "partition_id"], "left"
             )
-            self.lineage.append(lineage_rows, summary={"epoch": epoch}, bucketize=False)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        commits = [_c_images, _c_records, _c_seen, _c_bloom, _c_cuckoo,
-                   _c_frontier, _c_order_log, _c_lineage]
-        if self.archive_pages:
-            commits.append(_c_pages)
-        commit_sec: dict[str, float] = {}
-
-        def _timed(c):
-            t0 = _time.monotonic()
-            c()
-            commit_sec[c.__name__.lstrip("_")] = round(_time.monotonic() - t0, 3)
-
-        if os.environ.get("SPARK_GRAFT_SERIAL_COMMITS") == "1":
-            # diagnostic mode: serialized commits give TRUE per-commit cost
-            # (concurrent wall times include slot contention and mostly
-            # measure the last finisher) — used for tail attribution only
-            for c in commits:
-                _timed(c)
         else:
-            with ThreadPoolExecutor(max_workers=len(commits)) as ex:
-                futures = [ex.submit(_timed, c) for c in commits]
-                for f in futures:
-                    f.result()  # re-raise: a failed commit aborts the epoch
-                    # BEFORE the state record — resume() then rolls back the
-                    # tables that did land, keeping the group atomic
+            seq = F.col("host_seq").cast("long")
+        self.order_log.append(
+            ranked.select(
+                "url_key", "host", F.lit(ep.epoch).alias("epoch"),
+                seq.alias("host_seq"), "status", "attempts", "n_payload",
+            ),
+            summary={"epoch": ep.epoch},
+            bucketize=False,  # append-only evidence table, never MERGEd
+        )
 
-        checked.unpersist()
-        batch.unpersist()
-        if not self.keep_staging:
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-        self._record_state(epoch + 1)
-        _mark("commits")
-        phase_sec["commit_breakdown"] = commit_sec
-        return {
-            "epoch": epoch, "selected": n_selected, "deduped": n_deduped,
-            "fetched": totals["fetched"], "ok": totals["ok"],
-            "failed": totals["failed"], "robots_denied": totals["robots_denied"],
-            "not_found": totals["not_found"], "retried": totals["retried"],
-            "images": n_images, "discovered": n_discovered,
-            "cache_hits": totals["cache_hits"], "drained": False,
-            "phase_sec": phase_sec,
-            "payload_paths": payload_paths,
-        }
+    def c_lineage(self, ep: EpochContext) -> None:
+        lineage_rows = self.spark.createDataFrame(
+            [
+                (ep.epoch, r["partition_id"], r["host"], r["fetched"], r["ok"], 0,
+                 r["failed"], r["retried"], r["robots_denied"], r["not_found"],
+                 r["images"], r["cache_hits"])
+                for r in ep.groups
+            ],
+            LINEAGE_DDL,
+        )
+        self.lineage.append(
+            lineage_rows, summary={"epoch": ep.epoch}, bucketize=False
+        )
 
     def run(self, max_epochs: int = 100, maintain_every: int = 0) -> list[dict]:
         """Epoch loop; ``maintain_every`` > 0 runs vacuum() every N epochs
@@ -1114,11 +1090,11 @@ class CrawlEngine:
         are compacted — the MoR read tax is bounded by THIS cadence, the
         Iceberg maintenance contract), expire old table snapshots (SnapTable
         copy-on-write history is the dominant storage cost at 10^10 rows),
-        prune Bloom/cuckoo filter version directories, and drop staging dirs
-        older than the current epoch when they are not being kept as the
-        archive. Retention ≥ 2 keeps the resume() rollback window intact
-        (the state record never points more than one snapshot back); time
-        travel remains available inside the window."""
+        prune Bloom filter version directories, and drop staging dirs older
+        than the current epoch when they are not being kept as the archive.
+        Retention ≥ 2 keeps the resume() rollback window intact (the state
+        record never points more than one snapshot back); time travel
+        remains available inside the window."""
         keep_last = max(keep_last, 2)
         stats: dict = {}
         compacted = []
@@ -1136,21 +1112,16 @@ class CrawlEngine:
         for name in self.TABLE_NAMES:
             stats[name] = getattr(self, name).expire_snapshots(keep_last=keep_last)
         stats["bloom_versions_removed"] = self.bloom.expire_versions(keep_last)
-        # payload-key Blooms version per touched epoch like the seen Bloom
-        # but were never expired (ADVICE r5) — unbounded keys_bloom_* growth
-        # over a sustained campaign. They never roll back (extra positives
-        # are conservative), so the rollback-window floor is not needed;
-        # keep_last is still honored for uniform time-travel debugging.
+        # payload-key Blooms version per touched epoch like the seen Bloom,
+        # so they are expired too (unbounded keys_bloom_* growth otherwise).
+        # They never roll back (extra positives are conservative), so the
+        # rollback-window floor is not needed; keep_last is still honored
+        # for uniform time-travel debugging.
         stats["payload_keybloom_versions_removed"] = {
             part: kb.expire_versions(keep_last)
             for part, kb in self._payload_keyblooms.items()
         }
-        cf = self._seen_cuckoo()
-        if cf is not None:
-            stats["cuckoo_versions_removed"] = cf.expire_versions(keep_last)
         if not self.keep_staging:
-            import shutil
-
             sdir = os.path.join(self.workdir, "staging")
             if os.path.isdir(sdir):
                 epoch = self.current_epoch()
@@ -1158,5 +1129,3 @@ class CrawlEngine:
                     if d.startswith("epoch=") and int(d.split("=")[1]) < epoch:
                         shutil.rmtree(os.path.join(sdir, d), ignore_errors=True)
         return stats
-
-

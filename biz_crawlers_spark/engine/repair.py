@@ -1,5 +1,4 @@
-"""Checkpoint-repair job (D6) — the reason the engine carries a *deletable*
-seen-set variant.
+"""Checkpoint-repair job (D6).
 
 The reference's repair: when a crawl yields zero IDs, scan tracking entries
 for the target month whose .txt payload is missing, drop them from the seen
@@ -10,31 +9,28 @@ set, and retry once (GCISCrawler.php:82-90, :534-603). Distributed analog:
                    AND claimed payload (n_payload > 0 — search pages commit
                    nothing under their own key by design, §3.2 two-hop)
 
-Those keys are (1) deleted from the seen table, (2) deleted from the sharded
-cuckoo mirror (a Bloom filter cannot delete — Fan et al. CoNEXT'14), and
-(3) their frontier rows are re-opened (state='pending'), so the next epoch
-re-fetches them. Bounded single retry = the reference's `_retry` guard.
+Those keys are (1) deleted from the exact seen table and (2) their frontier
+rows are re-opened (state='pending'), so the next epoch re-fetches them.
+The Bloom filter cannot delete and does not need to: it is only a
+prefilter, and the exact anti-join after it admits the re-opened keys
+because the seen TABLE no longer contains them. Bounded single retry = the
+reference's `_retry` guard.
 
 Scale discipline: NOTHING here materializes keys on the driver. The lost
-set stays a DataFrame end-to-end (only counted); the cuckoo mirror is
-sharded like the Bloom filter and built/mutated via one shuffle +
-applyInPandas per operation (filters/cuckoo.py CuckooShards) — at the
-north_rule's 10^10 seen keys the round-1 whole-table driver
-materialization would have been ~80 GB.
+set stays a DataFrame end-to-end (only counted) — at the north_rule's 10^10
+seen keys a whole-table driver materialization would be ~80 GB.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from biz_crawlers_spark.filters.cuckoo import CuckooShards
-
 
 def repair_lost_payloads(engine) -> dict:
-    """Run one repair pass against a CrawlEngine. Returns counters."""
+    """Run one repair pass against a CrawlEngine. Returns counters:
+    ``lost`` seen rows without payload, ``unseen`` rows deleted from the
+    seen table, ``reopened`` frontier rows set back to pending."""
     seen = engine.seen.read()
     images = engine.images.read().select("url_key").distinct()
     records = engine.records.read().select("url_key").distinct()
@@ -61,20 +57,11 @@ def repair_lost_payloads(engine) -> dict:
         lost.unpersist()
         return {"lost": 0, "unseen": 0, "reopened": 0}
 
-    # the mirror must be loaded/built from the seen table BEFORE the seen
-    # delete, or a first-run lazy build would already be missing the lost keys
-    cf = cuckoo_mirror(engine)
-
-    # (1) exact seen-table delete
+    # (1) exact seen-table delete: ``lost`` is exactly the seen rows that
+    # carry a lost key, so the delete removes n_lost rows
     engine.seen.merge(lost, delete=True, summary={"op": "repair", "n": n_lost})
 
-    # (2) sharded cuckoo mirror delete (the Bloom filter keeps its false
-    # positives — harmless: the exact anti-join after the Bloom prefilter
-    # still admits the re-opened keys, because the seen TABLE no longer
-    # contains them)
-    removed = cf.delete_spark(lost, "url_key")
-
-    # (3) reopen frontier rows for a bounded retry
+    # (2) reopen frontier rows for a bounded retry
     reopened = (
         engine.frontier.read()
         .join(lost, "url_key", "left_semi")
@@ -87,24 +74,4 @@ def repair_lost_payloads(engine) -> dict:
     # out-of-band; resume() must not roll its commits back)
     engine._record_state(engine.current_epoch())
     lost.unpersist()
-    return {"lost": n_lost, "unseen": removed, "reopened": n_reopened}
-
-
-def _cuckoo_path(engine) -> str:
-    return os.path.join(engine.workdir, "seen_cuckoo")
-
-
-def cuckoo_mirror(engine, n_buckets: int = 1 << 16) -> CuckooShards:
-    """Load (or build, distributed, from the seen table) the deletable
-    seen-set mirror. Sharded like the Bloom filter; the build is one
-    shuffle + one applyInPandas pass — no driver-side key materialization."""
-    p = _cuckoo_path(engine)
-    if CuckooShards.exists(p):
-        return CuckooShards(p)
-    cf = CuckooShards.create(
-        p, n_shards=engine.bloom.n_shards, n_buckets=n_buckets
-    )
-    seen = engine.seen.read().select("url_key")
-    if not engine.seen.is_empty():
-        cf.add_spark(seen, "url_key")
-    return cf
+    return {"lost": n_lost, "unseen": n_lost, "reopened": n_reopened}

@@ -17,8 +17,9 @@ memory per run (GCISCrawler.php:484-511) — with a structure that scales:
   checkpoint; resumable like everything else)
 - Bloom guarantees no false negatives; the engine uses it as a prefilter and
   runs the exact anti-join only on Bloom-positives (SURVEY.md §4.1), so the
-  end-to-end dedup is exact. Deletions (checkpoint repair D6) fall back to
-  the cuckoo filter (filters/cuckoo.py).
+  end-to-end dedup is exact. Deletions (checkpoint repair D6) need no
+  filter delete: repair deletes from the exact seen table, and a lingering
+  Bloom positive anti-joins straight back into the batch.
 - SATURATION POLICY (VERDICT r4 #4): a filter sized at create time for 10^8
   keys silently degrades at 10^10 (fill ratio → 1, FPR → 1, and the
   prefilter turns into "anti-join everything" — correct but O(seen) join

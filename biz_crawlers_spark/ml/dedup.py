@@ -26,6 +26,8 @@ Scale notes (10^10-document framing):
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -61,6 +63,24 @@ def _norm_text() -> F.Column:
     return F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
 
 
+def _input_bytes(path: str) -> float:
+    """On-disk size of a parquet input: the file itself, or the sum of its
+    part files for a directory layout (the directory entry alone is ~4 KB).
+    A path the local filesystem cannot see (a non-local store) counts as
+    infinitely big — the scale case."""
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(path)
+            for f in files
+            if not f.startswith((".", "_"))
+        )
+    except OSError:
+        return float("inf")
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized-content hash: every doc mapped to the
     canonical (min doc_id) member of its content group."""
@@ -68,16 +88,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hashing runs on all cores, not in the one scan task (guide §2.5).
     # Size-adaptive: at small inputs the extra exchange costs more than the
     # single-task hashing it parallelizes (A/B sf1.0: 2.43→2.08 s WITH the
-    # spread; sf0.1: 0.80→1.19 s AGAINST it), so spread only when the file
+    # spread; sf0.1: 0.80→1.19 s AGAINST it), so spread only when the input
     # is big enough for the row-group bottleneck to bite.
     d = _docs(spark, sf_dir)
-    import os as _os
-
-    try:
-        _big = _os.path.getsize(f"{sf_dir}/documents.parquet") >= 4_000_000
-    except OSError:
-        _big = True  # non-local store: assume big (the scale case)
-    if _big:
+    if _input_bytes(f"{sf_dir}/documents.parquet") >= 4_000_000:
         d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     d = d.select("doc_id", F.md5(_norm_text()).alias("content_fp"))
     # canonical member via min-over-window: ONE exchange on content_fp

@@ -537,7 +537,6 @@ class SnapTable:
         source_parts: list[str] | None = None,
         mostly_new: bool = False,
         insert_direct: bool = False,
-        strategy: str = "join",
         mor: bool = False,
     ) -> int:
         """Upsert ``updates`` by key (or delete their keys if ``delete``).
@@ -585,21 +584,6 @@ class SnapTable:
         treated as matchable. A WRONG contract duplicates keys (the matched
         row survives in its old file AND lands in a new one) — use only
         where the source-part invariant is structural.
-
-        ``strategy="cogroup"`` executes the overlay as a BUCKET-cogrouped
-        pandas pass instead of a full-outer join: both sides shuffle ONCE,
-        on the table's own bucket expression, each task overlays exactly one
-        bucket (``combine_first`` = the same per-column coalesce), and the
-        output — already partitioned by bucket — is written DIRECTLY,
-        skipping the writer repartition. Net: the old rows move through one
-        exchange instead of two, and file layout comes out one file per
-        (bucket, part). Parallelism is capped at n_buckets (size buckets ≥
-        cores for big tables). Caveat (pandas Arrow conversion): 64-bit
-        integer columns that can be NULL on either side would transit as
-        float64 and lose low bits — valid only for tables whose long
-        columns are non-null (keys are; the frontier qualifies — its only
-        long is url_key). Output is bit-identical to the join strategy
-        (test-pinned).
 
         ``mostly_new=True`` (insert-heavy tables: images/records at crawl
         steady state, where almost every key is brand new) replaces the
@@ -777,10 +761,6 @@ class SnapTable:
                     updates.select(*self.key_cols), on=self.key_cols, how="left_anti"
                 )
                 op = "delete"
-            elif strategy == "cogroup":
-                merged = self._cogroup_overlay(old, updates, prefer)
-                new_files = self._write_data_files(merged, sid, direct=True)
-                return self._commit("merge", keep_files + new_files, summary)
             else:
                 merged = _overlay(old, updates)
                 op = "merge"
@@ -875,55 +855,6 @@ class SnapTable:
             )
             deletes = prev_m.get("deletes", []) + [{"path": del_rel, "seq": sid}]
         return self._commit("merge", prev_files + entries, summary, deletes=deletes)
-
-    def _cogroup_overlay(
-        self, old: DataFrame, updates: DataFrame, prefer: str
-    ) -> DataFrame:
-        """Bucket-cogrouped pandas overlay (merge ``strategy="cogroup"``).
-
-        Each side is grouped by the table's OWN bucket expression — one
-        exchange per side, aligned — and one pandas task overlays one
-        bucket: ``combine_first`` keyed on the key columns is exactly the
-        per-column "first non-null of (winner, loser)" the join strategy
-        computes. The output stays partitioned by bucket, so the caller
-        writes it with ``direct=True`` (no writer repartition).
-
-        Integer columns are returned as pandas NULLABLE Int dtypes so Arrow
-        conversion never routes an int column through float64 (the
-        r1-finding truncation hazard for 64-bit hashes)."""
-        from pyspark.sql.types import IntegerType, LongType, StructType
-
-        key_cols = list(self.key_cols)
-        cols = self._cols()
-        int_casts = {}
-        for f in StructType.fromDDL(self.schema_ddl).fields:
-            if isinstance(f.dataType, LongType):
-                int_casts[f.name] = "Int64"
-            elif isinstance(f.dataType, IntegerType):
-                int_casts[f.name] = "Int32"
-        first_new = prefer == "new"
-
-        def ov(_key, old_pdf, upd_pdf):
-            if len(old_pdf) == 0:
-                out = upd_pdf[cols]
-            elif len(upd_pdf) == 0:
-                out = old_pdf[cols]
-            else:
-                o = old_pdf.set_index(key_cols)
-                u = upd_pdf.set_index(key_cols)
-                merged = u.combine_first(o) if first_new else o.combine_first(u)
-                out = merged.reset_index()[cols]
-            out = out.copy()
-            for c, t in int_casts.items():
-                out[c] = out[c].astype(t)
-            return out
-
-        b = self._bucket_expr()
-        return (
-            old.groupBy(b.alias("_cb"))
-            .cogroup(updates.groupBy(b.alias("_cb")))
-            .applyInPandas(ov, schema=self.schema_ddl)
-        )
 
     # ---------- maintenance ----------
 

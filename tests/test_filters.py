@@ -1,16 +1,14 @@
-"""Bloom no-false-negative property + FPP sanity; cuckoo insert/delete;
-Spark-side sharded prefilter/update (SURVEY.md §5.2.1, §5.2.4)."""
+"""Bloom no-false-negative property + FPP sanity; Spark-side sharded
+prefilter/update (SURVEY.md §5.2.1, §5.2.4); repair at scale."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from biz_crawlers_spark.filters.bloom import BloomShards, splitmix64
-from biz_crawlers_spark.filters.cuckoo import CuckooFilter
 
 keys_st = st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=300, unique=True)
 
@@ -65,79 +63,14 @@ def test_splitmix_distribution():
     assert abs(bits.mean() - 0.5) < 0.01
 
 
-@given(keys_st)
-@settings(max_examples=30, deadline=None)
-def test_cuckoo_membership(keys):
-    cf = CuckooFilter(n_buckets=1 << 12)
-    ks = np.array(keys, dtype=np.int64)
-    cf.add(ks)
-    assert cf.contains(ks).all()
-
-
-def test_cuckoo_delete():
-    cf = CuckooFilter(n_buckets=1 << 12)
-    rng = np.random.default_rng(7)
-    ks = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-    ks = np.unique(ks)
-    cf.add(ks)
-    drop, keep = ks[: len(ks) // 2], ks[len(ks) // 2 :]
-    cf.delete(drop)
-    assert cf.contains(keep).all(), "deletes must not evict other keys"
-    assert cf.contains(drop).mean() < 0.05  # residual = fingerprint collisions only
-
-
-def test_cuckoo_save_load(tmp_path):
-    cf = CuckooFilter(n_buckets=1 << 10)
-    ks = np.arange(100, dtype=np.int64) * 37
-    cf.add(ks)
-    p = str(tmp_path / "cf.npy")
-    cf.save(p)
-    cf2 = CuckooFilter.load(p)
-    assert cf2.contains(ks).all()
-
-
-def test_cuckoo_full_raises():
-    cf = CuckooFilter(n_buckets=4, bucket_size=2, max_kicks=20)
-    with pytest.raises(RuntimeError):
-        cf.add(np.arange(200, dtype=np.int64))
-
-
-def test_cuckoo_shards_spark_add_delete(spark, tmp_path):
-    """CuckooShards: distributed add/delete via one shard-shuffle each —
-    membership correct, versions advance, untouched shards hardlinked,
-    NO key set ever collected to the driver (D6 scale path)."""
-    from biz_crawlers_spark.filters.cuckoo import CuckooShards
-
-    path = str(tmp_path / "cs")
-    cs = CuckooShards.create(path, n_shards=4, n_buckets=1 << 14)
-    df = spark.range(20_000).select((F.col("id") * 2654435761 + 7).alias("url_key"))
-    n_added = cs.add_spark(df, "url_key")
-    # a handful of inserts may be skipped as fingerprint false-presents —
-    # those keys still answer contains()=True, by construction
-    assert n_added >= 19_990 and cs.current_version() == 1
-    sample = np.array([i * 2654435761 + 7 for i in range(0, 20_000, 997)], dtype=np.int64)
-    assert cs.contains(sample).all()
-
-    victims = spark.range(0, 20_000, 100).select(
-        (F.col("id") * 2654435761 + 7).alias("url_key")
-    )
-    n_del = cs.delete_spark(victims, "url_key")
-    assert n_del == 200 and cs.current_version() == 2
-    gone = np.array([i * 2654435761 + 7 for i in range(0, 20_000, 100)], dtype=np.int64)
-    assert cs.contains(gone).sum() <= 2  # residual fp collisions only
-    kept = np.array([i * 2654435761 + 7 for i in range(1, 20_000, 997)], dtype=np.int64)
-    assert cs.contains(kept).all()
-
-
 def test_repair_scales_without_driver_collect(spark, tmp_path):
-    """D6 at scale: repair over a ~3×10^5-key seen table; the lost set and
-    the cuckoo mirror build/delete stay distributed (the only .collect in
-    the path is the bounded per-shard summary). Also: engine/repair.py must
-    contain no collect at all."""
+    """D6 at scale: repair over a ~3×10^5-key seen table; the lost set
+    stays distributed through the exact seen delete and the reopen.
+    engine/repair.py must contain no collect at all."""
     import os as _os
 
     from biz_crawlers_spark.engine.crawl import CrawlEngine
-    from biz_crawlers_spark.engine.repair import cuckoo_mirror, repair_lost_payloads
+    from biz_crawlers_spark.engine.repair import repair_lost_payloads
     from biz_crawlers_spark.politeness.budget import PolitenessBudget
 
     src = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
@@ -168,9 +101,5 @@ def test_repair_scales_without_driver_collect(spark, tmp_path):
     )
     stats = repair_lost_payloads(eng)
     assert stats["lost"] == 5 and stats["unseen"] == 5
-    cf = cuckoo_mirror(eng)
-    assert not cf.contains(np.array(lost_keys, dtype=np.int64)).any()
-    still = np.array([spark_xxhash64(str(i)) for i in range(10, 500)], dtype=np.int64)
-    assert cf.contains(still).all()
     seen_now = eng.seen.read().count()
     assert seen_now == n - 5

@@ -175,3 +175,32 @@ def test_wav_decode_real_riff(spark):
         # sine RMS ≈ amp/√2 within rounding of the int16 quantization
         assert abs(r["rms"] - r["peak"] / np.sqrt(2)) / r["peak"] < 0.02
         assert r["zero_crossings"] > 50
+
+
+def test_dedup_exact_spreads_directory_layout_input(spark, tmp_path):
+    """The size gate sums the part files of a directory-layout
+    documents.parquet (the directory entry alone is ~4 KB): a ≥ 4 MB
+    directory plans the doc_id spread, a small single file does not."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = tmp_path / "documents.parquet"
+    docs.mkdir()
+    rng = np.random.default_rng(3)
+    for part in range(2):
+        ids = np.arange(part * 1300, (part + 1) * 1300, dtype=np.int64)
+        text = [rng.bytes(1000).hex() for _ in ids]  # incompressible 2 KB
+        pq.write_table(
+            pa.table({"doc_id": ids, "text": text}),
+            str(docs / f"part-{part:05d}.parquet"),
+        )
+    assert os.path.getsize(docs) < 4_000_000 <= D._input_bytes(str(docs))
+
+    def spreads(sf_dir):
+        plan = D.dedup_exact(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        return "hashpartitioning(doc_id#" in plan.toString()
+
+    assert spreads(str(tmp_path))
+    assert not spreads(SF)

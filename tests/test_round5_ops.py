@@ -159,41 +159,6 @@ def test_mostly_new_overlay_on_real_matches(spark, tmp_path):
     assert len({f["bucket"] for f in files}) == 4
 
 
-def test_cogroup_strategy_identical_to_join(spark, tmp_path):
-    """merge(strategy='cogroup') must produce the same table content as the
-    default join strategy — overlay semantics (new wins per non-null
-    column), inserts, carried rows, part placement — on a frontier-shaped
-    table (nullable int columns, non-null long key)."""
-    ddl = "k long, host string, n int, v double, state string"
-    results = {}
-    for strat in ("join", "cogroup"):
-        t = SnapTable.create(
-            spark, str(tmp_path / f"cg_{strat}"), ddl, ["k"],
-            n_buckets=4, part_col="state",
-        )
-        t.overwrite(
-            spark.createDataFrame(
-                [(i, f"h{i % 3}", i, float(i), "pending") for i in range(200)], ddl
-            )
-        )
-        upd = spark.createDataFrame(
-            # matched transitions (n absent → keeps old), plus inserts
-            [(i, None, None, 9.5, "done") for i in range(0, 150)]
-            + [(i, f"h{i % 3}", i, 0.5, "pending") for i in range(300, 340)],
-            ddl,
-        )
-        t.merge(upd, dedupe=False, source_parts=["pending"], strategy=strat)
-        results[strat] = sorted(
-            (r["k"], r["host"], r["n"], r["v"], r["state"])
-            for r in t.read().collect()
-        )
-        if strat == "cogroup":
-            files = t._load_manifest(t.current_snapshot_id())["files"]
-            assert all("part" in f for f in files)
-    assert results["join"] == results["cogroup"]
-    assert len(results["join"]) == 240
-
-
 def test_mor_upsert_append(spark, tmp_path):
     """merge(mor=True): appends the batch + an equality-delete entry; reads
     resolve newest-sequence rows (Iceberg MoR shape). Matched keys get the

@@ -150,7 +150,7 @@ def test_d9_cache_routing_reparse_without_refetch(spark, tmp_path):
 
 def test_vacuum_storage_maintenance(spark, tmp_path):
     """vacuum(): snapshot/filter-version retention shrinks on-disk state
-    while the live tables, the Bloom/cuckoo state, and resumability stay
+    while the live tables, the Bloom state, and resumability stay
     intact (crash-rollback window preserved)."""
     import os
 
