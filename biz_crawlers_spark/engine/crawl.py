@@ -25,11 +25,12 @@ runs under its own Spark job group and is timed into ``phase_sec``:
   stats_pass
     7. one aggregate over staging: lineage rows, epoch totals, order offsets
   commits
-    8. the ``c_*`` members, concurrently: images / records / pages adopt or
-       MERGE, seen append, Bloom add, fused frontier MERGE (state
-       transitions + dedup-done + discovered inserts), order_log append,
-       lineage append — then the STATE RECORD, which makes the whole group
-       atomic (resume() rolls back any table that is ahead of the record)
+    8. the ``c_*`` members, concurrently: images / records adopt (+ an
+       O(duplicates) patch), pages MoR merge, seen append, Bloom add, fused
+       frontier MERGE (state transitions + dedup-done + discovered inserts),
+       order_log append, lineage append — then the STATE RECORD, which
+       makes the whole group atomic (resume() rolls back any table that is
+       ahead of the record)
 
 The loop repeats until the frontier drains (early termination, §4.1).
 
@@ -49,12 +50,13 @@ O(accumulated tables), or a long campaign decays):
   declare ``source_parts=["pending"]`` (their matched keys are all
   currently-pending by construction), so the done/denied/failed history is
   carried over untouched — c_frontier is flat across epochs
-- payload commits are ZERO-COPY when the batch is key-distinct: staging's
-  row_type partitions are adopted by rename, with cross-epoch matched keys
-  (if any) riding the same commit as an equality-delete entry (merge-on-
-  read); in-batch duplicate keys (id collisions) fall back to an O(batch)
-  MoR append. The whole-table copy-on-write rewrite never happens, and the
-  MoR read tax is folded by the vacuum compaction cadence
+- payload commits are ZERO-COPY in every mode: staging's row_type
+  partitions are hard-linked into the table (staging stays intact until
+  the commit group is done), with cross-epoch matched keys (if any) riding
+  the same commit as an equality-delete entry (merge-on-read); in-batch
+  duplicate keys (id collisions) add an O(duplicates) MoR patch commit.
+  The whole-table copy-on-write rewrite never happens, and the MoR read
+  tax is folded by the vacuum compaction cadence
 - the order log derives from the sequence the fetch stage itself emits
   (rows arrive sorted per range-contiguous lane; cached D9 rows are
   numbered in place like fetched ones) + per-(partition, host) offsets
@@ -111,6 +113,13 @@ TOTAL_KEYS = (
     "fetched", "ok", "failed", "retried", "robots_denied", "not_found",
     "images", "recs", "disc", "cache_hits",
 )
+
+# Bloom hash count of every filter the engine creates
+BLOOM_K = 7
+# D2 at 10^10 keys: a Bloom whose max shard fill exceeds this is rebuilt into
+# a larger bit space at the epoch commit (filters/bloom.py saturation
+# policy); 0.5 keeps FPR ≈ 0.5^k ≈ 0.8% worst-case
+BLOOM_REBUILD_FILL = 0.5
 
 # the local properties SparkContext.setJobGroup sets
 _JOB_GROUP_PROPS = (
@@ -171,7 +180,6 @@ class CrawlEngine:
         per_host_budget: int = 100_000,
         bloom_shards: int = 16,
         bloom_bits: int = 1 << 22,
-        bloom_k: int = 7,
         table_buckets: int = 16,
         fetch_partitions: int | None = None,
         fetch_salting: int = 0,
@@ -179,7 +187,6 @@ class CrawlEngine:
         ttl_epochs: int | None = None,
         archive_pages: bool = False,
         robots_ttl_epochs: int | None = None,
-        bloom_rebuild_fill: float = 0.5,
     ):
         """``fetch_salting``: 0 (default, strict mode) partitions the fetch
         stage by host only — per-host politeness pacing is globally correct,
@@ -199,6 +206,9 @@ class CrawlEngine:
             spark.conf.get("spark.sql.shuffle.partitions")
         )
         self.fetch_salting = fetch_salting
+        # keep each epoch's staging directory after its commits (an archive:
+        # the payload commit links its files, so keeping them copies nothing
+        # and changes no commit path)
         self.keep_staging = keep_staging
         # D7 (DetailCrawler.php:125-129, :1172-1210): None = permanent seen
         # set (report crawls); an int makes seen rows EXPIRE after that many
@@ -212,10 +222,6 @@ class CrawlEngine:
         # P8: robots rules older than this many epochs re-fetch (None = once
         # per host, ever — the robots SnapTable is the durable cache)
         self.robots_ttl_epochs = robots_ttl_epochs
-        # D2 at 10^10 keys: max shard fill above this triggers a Bloom
-        # rebuild into a larger bit space at epoch commit (filters/bloom.py
-        # saturation policy); 0.5 keeps FPR ≈ 0.5^k ≈ 0.8% worst-case
-        self.bloom_rebuild_fill = bloom_rebuild_fill
         os.makedirs(self.workdir, exist_ok=True)
 
         def tbl(name: str, ddl: str, keys: list[str], **extra) -> SnapTable:
@@ -262,7 +268,7 @@ class CrawlEngine:
         self.bloom = (
             BloomShards(bp)
             if os.path.exists(os.path.join(bp, "_meta.json"))
-            else BloomShards.create(bp, n_shards=bloom_shards, m_bits=bloom_bits, k=bloom_k)
+            else BloomShards.create(bp, n_shards=bloom_shards, m_bits=bloom_bits, k=BLOOM_K)
         )
         # Payload-key Blooms gate the zero-copy adopt's matched-key check:
         # probing the batch keys against a maintained Bloom is O(batch),
@@ -289,7 +295,7 @@ class CrawlEngine:
                 kb = BloomShards(kp)
             else:
                 kb = BloomShards.create(
-                    kp, n_shards=bloom_shards, m_bits=bloom_bits, k=bloom_k
+                    kp, n_shards=bloom_shards, m_bits=bloom_bits, k=BLOOM_K
                 )
                 if not table.is_empty():
                     # legacy workdir (pre-keybloom engine): one-time rebuild
@@ -336,13 +342,13 @@ class CrawlEngine:
     def _rebuild_if_saturated(self, bloom: BloomShards, keys, key_col: str) -> None:
         """Saturation policy, shared by the seen-set Bloom and the
         payload-key Blooms: when the max shard fill (an O(1) version-meta
-        read) crosses ``bloom_rebuild_fill``, rebuild into a larger bit
+        read) crosses ``BLOOM_REBUILD_FILL``, rebuild into a larger bit
         space from ``keys()`` — the durable key set — as its own version.
         This rare amortized O(table) pass keeps the per-epoch probe O(batch)
         forever; rollback via the state record still lands on intact older
         versions. ``keys`` is a callable so the key scan is only planned
         when a rebuild runs."""
-        if bloom.fill_ratio() > self.bloom_rebuild_fill:
+        if bloom.fill_ratio() > BLOOM_REBUILD_FILL:
             bloom.rebuild_spark(keys(), key_col)
 
     def _record_state(self, epoch: int) -> None:
@@ -683,7 +689,7 @@ class CrawlEngine:
         # jobs never even open each other's files (this is also what makes
         # the zero-copy adopt safe under concurrent commits); (b) the
         # image/record partitions are pure payload files the payload tables
-        # ADOPT by rename — the epoch's bytes are written exactly once
+        # ADOPT by hard link — the epoch's bytes are written exactly once
         fetched_df.write.mode("overwrite").partitionBy("row_type").parquet(ep.staging)
         ep.fetched = self.spark.read.parquet(ep.staging)
 
@@ -771,11 +777,11 @@ class CrawlEngine:
         self._record_state(ep.epoch + 1)
 
     # Payload tables are INSERT-HEAVY: at steady state nearly every
-    # image_id/entity_id is brand new. The FAST path is ZERO-COPY ADOPT: the
-    # staging write already produced pure image/record parquet files
-    # (row_type partitions, table column names, epoch + corrupt stamped
-    # in-stage), so after narrow key jobs find the batch's duplicate and
-    # matched keys, the commit just RENAMES those files in
+    # image_id/entity_id is brand new. Their ONE commit path is ZERO-COPY
+    # ADOPT: the staging write already produced pure image/record parquet
+    # files (row_type partitions, table column names, epoch + corrupt
+    # stamped in-stage), so after narrow key jobs find the batch's duplicate
+    # and matched keys, the commit just HARD-LINKS those files in
     # (SnapTable.adopt_files) — the payload bytes are written exactly once
     # per epoch and the commit cost is O(files) metadata, independent of both
     # batch and table size.
@@ -803,111 +809,75 @@ class CrawlEngine:
         self, ep: EpochContext, table: SnapTable, part_dir: str, df_rows,
         key: str, n_rows: int,
     ) -> None:
-        keybloom = self._payload_keyblooms[part_dir]
-        raw_keys = lambda: table.read_keys_raw().select(  # noqa: E731
-            F.xxhash64(F.col(key)).alias("_kh")
-        )
         src = os.path.join(ep.staging, f"row_type={part_dir}")
-        if not self.keep_staging and n_rows > 0 and os.path.isdir(src):
-            # ONE narrow key job yields the distinct count AND the in-batch
-            # duplicate keys
-            cnt = (
-                ep.rows(part_dir)
-                .groupBy(key)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .withColumn("_kh", F.xxhash64(F.col(key)))
-            )
-            # adopt RENAMES the staging files this plan reads, so every
-            # post-adopt use (dup keys, the Bloom add) must come from the
-            # cache — persist is materialized by the agg below
-            cnt = cnt.persist(StorageLevel.MEMORY_AND_DISK)
-            patch_rows = None
-            gate = None
-            try:
-                agg = cnt.agg(
-                    F.count(F.lit(1)).alias("_nd"),
-                    F.coalesce(
-                        F.sum((F.col("_n") > 1).cast("long")), F.lit(0)
-                    ).alias("_ndup"),
-                ).first()
-                n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
-                if n_dist < n_rows:
-                    # ADOPT + PATCH: a few in-batch duplicate keys must not
-                    # force a full-batch byte rewrite (the MoR fallback
-                    # measured 2-3x the adopt commit: it re-writes the whole
-                    # image payload because ~100 of ~10^6 keys collided).
-                    # Materialize the duplicated keys' rows — already
-                    # key-distinct via df_rows' dropDuplicates — BEFORE the
-                    # rename; after the adopt they become a tiny MoR commit
-                    # whose higher-seq equality-delete entry supersedes every
-                    # adopted copy of those keys. Payload written: O(n_dup)
-                    # instead of O(batch); the dead adopted copies fold out
-                    # at the vacuum/compaction cadence.
-                    dup_keys = cnt.filter(F.col("_n") > 1).select(key)
-                    patch_rows = df_rows.join(
-                        F.broadcast(dup_keys), key, "left_semi"
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    patch_rows.count()  # materialize before the rename
-                # zero-copy adopt regardless of cross-epoch matches: matched
-                # keys become an equality-delete entry riding the same
-                # commit, found by probing the batch keys against the
-                # maintained payload-key Bloom — O(batch), a conservative
-                # superset (false positives are harmless no-op deletes, see
-                # __init__). FUSED probe+insert: one shard shuffle yields the
-                # membership test AND the Bloom add; the add landing even if
-                # a later step aborts the epoch is the documented
-                # harmless-lingering-positive case.
-                files = [
-                    os.path.join(src, fn)
-                    for fn in os.listdir(src)
-                    if fn.endswith(".parquet")
-                ]
-                gate = keybloom.check_add_spark(cnt, "_kh")
-                matched = None
-                n_matched = 0
-                if not table.is_empty():
-                    matched = gate.filter(F.col("maybe_seen")).select(key)
-                    n_matched = matched.count()
-                table.adopt_files(
-                    files,
-                    summary={
-                        "epoch": ep.epoch, "adopted": True,
-                        "matched": n_matched, "patched": n_dup,
-                    },
-                    delete_keys_df=matched if n_matched else None,
-                )
-                if patch_rows is not None:
-                    table.merge(
-                        patch_rows,
-                        summary={"epoch": ep.epoch, "mor": True, "patch": True},
-                        dedupe=False, mor=True, insert_direct=True,
-                    )
-                self._rebuild_if_saturated(keybloom, raw_keys, "_kh")
-                ep.payload_paths[part_dir] = (
-                    "adopt" if patch_rows is None else "adopt_patch"
-                )
-                return
-            finally:
-                if gate is not None:
-                    gate.unpersist()
-                cnt.unpersist()
-                if patch_rows is not None:
-                    patch_rows.unpersist()
-        # fallback (keep_staging, or an empty or absent staging partition):
-        # the full-batch MERGE-ON-READ upsert — append O(batch) + an
-        # equality-delete entry; never an O(table) rewrite (refresh crawls
-        # re-crawl whole epochs). The read tax is folded back by the vacuum
-        # compaction cadence.
-        table.merge(
-            df_rows, summary={"epoch": ep.epoch, "mor": True}, dedupe=False,
-            mor=True, insert_direct=True,
+        if n_rows == 0 or not os.path.isdir(src):
+            return  # nothing extracted: the table keeps its snapshot
+        keybloom = self._payload_keyblooms[part_dir]
+        # ONE narrow key job yields the distinct count AND the in-batch
+        # duplicate keys; cached because the gate and the patch reuse it
+        cnt = (
+            ep.rows(part_dir)
+            .groupBy(key)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .withColumn("_kh", F.xxhash64(F.col(key)))
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if n_rows > 0:
-            keybloom.add_spark(
-                df_rows.select(F.xxhash64(F.col(key)).alias("_kh")), "_kh"
+        gate = None
+        try:
+            agg = cnt.agg(
+                F.count(F.lit(1)).alias("_nd"),
+                F.coalesce(F.sum((F.col("_n") > 1).cast("long")), F.lit(0)).alias("_ndup"),
+            ).first()
+            n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
+            # cross-epoch matches become an equality-delete entry riding the
+            # adopt commit, found by probing the batch keys against the
+            # maintained payload-key Bloom — O(batch), a conservative
+            # superset (false positives are harmless no-op deletes, see
+            # __init__). FUSED probe+insert: one shard shuffle yields the
+            # membership test AND the Bloom add; the add landing even if a
+            # later step aborts the epoch is the documented
+            # harmless-lingering-positive case.
+            files = [
+                os.path.join(src, fn) for fn in os.listdir(src) if fn.endswith(".parquet")
+            ]
+            gate = keybloom.check_add_spark(cnt, "_kh")
+            matched = None
+            n_matched = 0
+            if not table.is_empty():
+                matched = gate.filter(F.col("maybe_seen")).select(key)
+                n_matched = matched.count()
+            table.adopt_files(
+                files,
+                summary={
+                    "epoch": ep.epoch, "adopted": True,
+                    "matched": n_matched, "patched": n_dup,
+                },
+                delete_keys_df=matched if n_matched else None,
             )
-            self._rebuild_if_saturated(keybloom, raw_keys, "_kh")
-        ep.payload_paths[part_dir] = "mor"
+            if n_dist < n_rows:
+                # ADOPT + PATCH: a few in-batch duplicate keys must not force
+                # a full-batch byte rewrite. One row per duplicated key
+                # (df_rows is key-distinct) lands as a tiny MoR commit whose
+                # higher-seq equality-delete entry supersedes every adopted
+                # copy: O(n_dup) payload written; the dead adopted copies
+                # fold out at the vacuum/compaction cadence. Staging is
+                # still intact (the adopt links), so the rows read lazily.
+                dup_keys = cnt.filter(F.col("_n") > 1).select(key)
+                table.merge(
+                    df_rows.join(F.broadcast(dup_keys), key, "left_semi"),
+                    summary={"epoch": ep.epoch, "mor": True, "patch": True},
+                    dedupe=False, mor=True,
+                )
+            self._rebuild_if_saturated(
+                keybloom,
+                lambda: table.read_keys_raw().select(F.xxhash64(F.col(key)).alias("_kh")),
+                "_kh",
+            )
+            ep.payload_paths[part_dir] = "adopt" if n_dist == n_rows else "adopt_patch"
+        finally:
+            if gate is not None:
+                gate.unpersist()
+            cnt.unpersist()
 
     def c_pages(self, ep: EpochContext) -> None:
         page_rows = (
@@ -921,8 +891,7 @@ class CrawlEngine:
         # MoR upsert: re-archived bodies (TTL re-crawls) supersede by key at
         # read time — O(batch) write, never an O(table) rewrite
         self.pages.merge(
-            page_rows, summary={"epoch": ep.epoch}, dedupe=False, mor=True,
-            insert_direct=True,
+            page_rows, summary={"epoch": ep.epoch}, dedupe=False, mor=True
         )
 
     def c_seen(self, ep: EpochContext) -> None:

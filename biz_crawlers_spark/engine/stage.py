@@ -47,7 +47,7 @@ from biz_crawlers_spark.politeness.robots import is_allowed, parse_robots
 # ``seq``/``epoch``/``corrupt`` carry the IMAGES/RECORDS table column names
 # and values directly: the staging write is partitioned by row_type, so the
 # image/record payload files are, byte-for-byte, valid table data files —
-# the epoch commit ADOPTS them by rename (SnapTable.adopt_files) instead of
+# the epoch commit ADOPTS them by hard link (SnapTable.adopt_files) instead of
 # reading + re-shuffling + re-writing the payload (bytes are written
 # exactly ONCE per epoch).
 STAGE_DDL = (
@@ -123,8 +123,8 @@ def _raise_on_json_constant(_v):
     # strictness twin of Spark's try_parse_json, which rejects the
     # non-standard NaN/Infinity/-Infinity tokens that Python's json module
     # accepts by default (ADVICE r5): without this, an adopted staging file
-    # would carry corrupt=false where the merge fallback computes
-    # corrupt=true and the D7 invalidation probe would miss the record
+    # would carry corrupt=false where a merge (the adopt's patch rows, a
+    # compaction) computes corrupt=true and the D7 invalidation probe would miss the record
     raise ValueError("non-standard JSON constant")
 
 
@@ -146,8 +146,8 @@ _STRICT_JSON = json.JSONDecoder(
 def _record_corrupt(biz_items) -> bool:
     """Python twin of frontier.seed.RECORDS_CORRUPT_EXPR
     (``biz_items IS NOT NULL AND try_parse_json(biz_items) IS NULL``) so
-    adopted staging files carry the D7 generated column pre-computed (the
-    merge fallback recomputes it via the SQL expr; equivalence is pinned
+    adopted staging files carry the D7 generated column pre-computed (every
+    merge recomputes it via the SQL expr; equivalence is pinned
     input by input against Spark in tests/test_round5_ops.py).
 
     Spark parses ONE root value and ignores what follows it, except that a

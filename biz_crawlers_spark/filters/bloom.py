@@ -20,21 +20,18 @@ memory per run (GCISCrawler.php:484-511) — with a structure that scales:
   end-to-end dedup is exact. Deletions (checkpoint repair D6) need no
   filter delete: repair deletes from the exact seen table, and a lingering
   Bloom positive anti-joins straight back into the batch.
-- SATURATION POLICY (VERDICT r4 #4): a filter sized at create time for 10^8
-  keys silently degrades at 10^10 (fill ratio → 1, FPR → 1, and the
-  prefilter turns into "anti-join everything" — correct but O(seen) join
-  work, the exact cost D2 exists to avoid). Every ``add_spark`` therefore
-  records per-shard set-bit counts in the new version's ``_vmeta.json``;
-  ``fill_ratio()`` is an O(1) driver read, and when it crosses the engine's
-  threshold (default 0.5) the epoch commit triggers ``rebuild_spark`` —
-  a distributed re-insert of the full seen set into a fresh, larger bit
-  space (sized from the fill-estimated key count, power-of-two, targeting
-  ≤0.25 fill with headroom). ``m_bits`` is VERSIONED: each version dir
-  carries its own size in ``_vmeta.json``, so rollback to a pre-rebuild
-  version (the engine's epoch-atomicity contract) keeps working.
+- SATURATION POLICY: a filter sized for 10^8 keys degrades at 10^10 (fill
+  → 1, FPR → 1: the prefilter becomes "anti-join everything"). Every
+  version records per-shard set-bit counts in its ``_vmeta.json``, so
+  ``fill_ratio()`` is an O(1) driver read; past the engine's threshold the
+  epoch commit calls ``rebuild_spark`` (re-insert of the full key set into
+  a larger bit space). ``m_bits`` is per version, so rollback to a
+  pre-rebuild version keeps working.
 
 Spark integration keeps everything co-partitioned by shard: one shuffle on
-(shard), then applyInPandas groups load/update exactly one shard file each.
+(shard), then applyInPandas groups load/update exactly one shard file each
+— one kernel (``_shard_pass``) for probe, insert and rebuild, one version
+commit (``_commit_version``) for every new version.
 
 SIZING KNOB: ``n_shards`` caps the prefilter/insert parallelism (one task
 per shard), so set it to at least the executor-core count of the target
@@ -71,6 +68,13 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
+def _atomic_write(dest: str, text: str) -> None:
+    tmp = f"{dest}.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, dest)
+
+
 def _positions(keys: np.ndarray, k: int, m_bits: int) -> np.ndarray:
     """(n, k) bit positions via double hashing."""
     u = keys.astype(np.int64).view(np.uint64)
@@ -99,24 +103,17 @@ class BloomShards:
     def create(path: str, n_shards: int = 16, m_bits: int = 1 << 20, k: int = 7) -> "BloomShards":
         path = path.rstrip("/")
         os.makedirs(os.path.join(path, "v0"), exist_ok=True)
-        empty = np.zeros(m_bits // 8, dtype=np.uint8)
-        for s in range(n_shards):
-            np.save(os.path.join(path, "v0", f"shard-{s}.npy"), empty)
-        with open(os.path.join(path, "v0", "_vmeta.json"), "w") as f:
-            json.dump({"m_bits": m_bits, "fills": {str(s): 0 for s in range(n_shards)}}, f)
-        tmp = os.path.join(path, f"_meta.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"n_shards": n_shards, "m_bits": m_bits, "k": k}, f)
-        os.replace(tmp, os.path.join(path, "_meta.json"))
-        BloomShards._write_pointer(path, 0)
-        return BloomShards(path)
+        _atomic_write(
+            os.path.join(path, "_meta.json"),
+            json.dumps({"n_shards": n_shards, "m_bits": m_bits, "k": k}),
+        )
+        bf = BloomShards(path)
+        bf._commit_version(0, m_bits, {}, base=None)
+        return bf
 
     @staticmethod
     def _write_pointer(path: str, version: int) -> None:
-        tmp = os.path.join(path, f"_current.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(path, "_current"))
+        _atomic_write(os.path.join(path, "_current"), str(version))
 
     def current_version(self) -> int:
         with open(os.path.join(self.path, "_current")) as f:
@@ -138,10 +135,34 @@ class BloomShards:
         return {"m_bits": self.m_bits, "fills": {}}
 
     def _write_vmeta(self, version: int, m_bits: int, fills: dict) -> None:
-        tmp = self._vmeta_path(version) + f".{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"m_bits": m_bits, "fills": {str(k): int(v) for k, v in fills.items()}}, f)
-        os.replace(tmp, self._vmeta_path(version))
+        fills = {str(k): int(v) for k, v in fills.items()}
+        _atomic_write(self._vmeta_path(version), json.dumps({"m_bits": m_bits, "fills": fills}))
+
+    def _commit_version(
+        self, new: int, m_bits: int, touched: dict, base: int | None
+    ) -> int:
+        """Finish version ``new`` whose ``touched`` shards (id -> set bits)
+        are already written: every other shard is hard-linked from version
+        ``base`` (zero-filled when ``base`` is None: a fresh bit space), the
+        per-shard fills go to ``_vmeta.json``, and the pointer moves last,
+        so a crash before it leaves the current version intact."""
+        fills = {} if base is None else {
+            int(s): int(c) for s, c in self._read_vmeta(base).get("fills", {}).items()
+        }
+        fills.update(touched)
+        for s in sorted(set(range(self.n_shards)) - set(touched)):
+            dst = self._shard_file(new, s)
+            if base is None:
+                np.save(dst, np.zeros(m_bits // 8, dtype=np.uint8))
+                fills[s] = 0
+                continue
+            try:
+                os.link(self._shard_file(base, s), dst)
+            except OSError:  # cross-device, or a leftover of a crashed commit
+                shutil.copyfile(self._shard_file(base, s), dst)
+        self._write_vmeta(new, m_bits, fills)
+        self._write_pointer(self.path, new)
+        return new
 
     def m_bits_of(self, version: int | None = None) -> int:
         """The bit-space size of a version (versions before a rebuild keep
@@ -153,9 +174,9 @@ class BloomShards:
     def fill_ratio(self, version: int | None = None) -> float:
         """Max per-shard fill (set bits / m_bits) of a version — an O(1)
         driver-side metadata read when every shard's count is recorded
-        (every ``add_spark``/``add``/``rebuild_spark`` records them); shards
-        without a recorded count (legacy versions) are counted once from
-        their bit arrays and cached back into the vmeta."""
+        (every version commit records them); shards without a recorded
+        count (legacy versions) are counted once from their bit arrays and
+        cached back into the vmeta."""
         v = self.current_version() if version is None else version
         meta = self._read_vmeta(v)
         fills = {int(k): int(c) for k, c in meta.get("fills", {}).items()}
@@ -185,54 +206,6 @@ class BloomShards:
             total += -(m / self.k) * math.log(1.0 - p)
         return int(total)
 
-    def rebuild_spark(
-        self, df: DataFrame, key_col: str = "url_key", m_bits_new: int | None = None
-    ) -> int:
-        """Re-size/rebuild: distributed re-insert of the FULL key set (the
-        seen table — the durable source of truth) into a fresh bit space as
-        version v+1. Old versions keep their own m_bits (``_vmeta.json``),
-        so the engine's rollback window stays intact. Default sizing targets
-        ≤0.25 max fill with 2× headroom: m = next_pow2(7·k·n̂)."""
-        if m_bits_new is None:
-            n_est = max(self.estimated_keys(), 1)
-            target = 7 * self.k * n_est
-            m_bits_new = 1 << max(int(target - 1).bit_length(), 10)
-        path, k, n_shards = self.path, self.k, self.n_shards
-        ver = self.current_version()
-        new = ver + 1
-        os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
-
-        def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = pdf[key_col].to_numpy(dtype=np.int64)
-            s = int(keys[0] % n_shards)
-            s = s + n_shards if s < 0 else s
-            bits = np.zeros(m_bits_new // 8, dtype=np.uint8)
-            pos = _positions(keys, k, m_bits_new)
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            tmp = os.path.join(path, f"v{new}", f".tmp-{uuid.uuid4().hex}-shard-{s}.npy")
-            np.save(tmp, bits)
-            os.replace(tmp, os.path.join(path, f"v{new}", f"shard-{s}.npy"))
-            return pd.DataFrame(
-                {"shard": [s], "ones": [int(np.unpackbits(bits).sum())]}
-            )
-
-        shard_col = F.pmod(F.col(key_col), F.lit(n_shards))
-        built = (
-            df.select(key_col)
-            .groupBy(shard_col.alias("_shard"))
-            .applyInPandas(lambda key, pdf: _build(pdf), schema="shard int, ones long")
-            .collect()
-        )
-        fills = {r["shard"]: r["ones"] for r in built}
-        empty = np.zeros(m_bits_new // 8, dtype=np.uint8)
-        for s in range(n_shards):
-            if s not in fills:
-                np.save(self._shard_file(new, s), empty)
-                fills[s] = 0
-        self._write_vmeta(new, m_bits_new, fills)
-        self._write_pointer(self.path, new)
-        return new
-
     def expire_versions(self, keep_last: int = 2) -> int:
         """Drop shard-file versions older than the last ``keep_last``
         (hardlinked untouched shards cost nothing, but every TOUCHED shard
@@ -254,8 +227,7 @@ class BloomShards:
         return removed
 
     def shard_of(self, keys: np.ndarray) -> np.ndarray:
-        r = keys.astype(np.int64) % self.n_shards
-        return np.where(r < 0, r + self.n_shards, r)
+        return keys.astype(np.int64) % self.n_shards  # numpy %: never negative
 
     # ---------- local (simulator / small-scale) API ----------
 
@@ -279,71 +251,104 @@ class BloomShards:
         keys = np.asarray(keys, dtype=np.int64)
         ver = self.current_version()
         m_bits = self.m_bits_of(ver)
-        prev_fills = {
-            int(k): int(v) for k, v in self._read_vmeta(ver).get("fills", {}).items()
-        }
         new = ver + 1
         os.makedirs(os.path.join(self.path, f"v{new}"), exist_ok=True)
         shards = self.shard_of(keys)
-        touched = set(int(s) for s in np.unique(shards))
-        fills = dict(prev_fills)
-        for s in range(self.n_shards):
-            src = self._shard_file(ver, s)
-            dst = self._shard_file(new, s)
-            if s in touched:
-                bits = np.load(src).copy()
-                ks = keys[shards == s]
-                pos = _positions(ks, self.k, m_bits)
-                np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-                np.save(dst, bits)
-                fills[s] = int(np.unpackbits(bits).sum())
-            else:
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copyfile(src, dst)
-        self._write_vmeta(new, m_bits, fills)
-        self._write_pointer(self.path, new)
-        return new
+        touched = {}
+        for s in (int(s) for s in np.unique(shards)):
+            bits = np.load(self._shard_file(ver, s))
+            pos = _positions(keys[shards == s], self.k, m_bits)
+            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            np.save(self._shard_file(new, s), bits)
+            touched[s] = int(np.unpackbits(bits).sum())
+        return self._commit_version(new, m_bits, touched, base=ver)
 
     # ---------- Spark API (co-partitioned by shard) ----------
 
-    def prefilter_spark(self, df: DataFrame, key_col: str = "url_key") -> DataFrame:
-        """df + boolean ``maybe_seen``. One shuffle on shard; each task reads
-        only its shard's bits. Bloom-negatives are guaranteed-new."""
+    def _shard_pass(
+        self, df: DataFrame, key_col: str, probe: bool, insert: bool,
+        m_bits_fresh: int | None = None,
+    ) -> DataFrame:
+        """The shard kernel of every Spark method: one shuffle on the shard;
+        each group loads its shard's bits (zeros of ``m_bits_fresh`` for a
+        rebuild), optionally records each key's membership BEFORE the
+        insert, optionally sets the keys' bits and writes the shard into
+        version v+1 (tmp + replace, so a retried task rewrites one file).
+        Returns the input rows + ``maybe_seen`` when probing (+ the
+        ``_shard_*`` bookkeeping when also inserting), else one
+        ``(_shard_id, _shard_ones)`` row per shard. ``_commit_version``
+        finishes an inserted version."""
         path, k, n_shards = self.path, self.k, self.n_shards
         ver = self.current_version()
-        m_bits = self.m_bits_of(ver)
-        cols = df.columns
-        # fresh StructType — .add() would mutate the DataFrame's cached schema
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-        )
+        m_bits = m_bits_fresh or self.m_bits_of(ver)
+        new = ver + 1
+        if insert:
+            os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
+        book = [
+            T.StructField("_shard_id", T.IntegerType()),
+            T.StructField("_shard_ones", T.LongType()),
+        ]
+        if probe:
+            cols = df.columns
+            # fresh StructType — .add() would mutate the DataFrame's cached schema
+            schema = T.StructType(
+                list(df.schema.fields)
+                + [T.StructField("maybe_seen", T.BooleanType())]
+                + (book if insert else [])
+            )
+        else:
+            df, schema = df.select(key_col), T.StructType(book)
 
-        def _check(pdf: pd.DataFrame) -> pd.DataFrame:
+        def _pass(pdf: pd.DataFrame) -> pd.DataFrame:
             keys = pdf[key_col].to_numpy(dtype=np.int64)
-            s = int(keys[0] % n_shards)
-            s = s + n_shards if s < 0 else s
-            bits = np.load(os.path.join(path, f"v{ver}", f"shard-{s}.npy"))
+            s = int(keys[0] % n_shards)  # numpy remainder: same sign as pmod
+            if m_bits_fresh:
+                bits = np.zeros(m_bits // 8, dtype=np.uint8)
+            else:
+                bits = np.load(os.path.join(path, f"v{ver}", f"shard-{s}.npy"))
             pos = _positions(keys, k, m_bits)
-            hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-            out = pdf[cols].copy()
-            out["maybe_seen"] = hit.all(axis=1)
+            byte, bit = pos >> 3, (1 << (pos & 7)).astype(np.uint8)
+            if probe:
+                out = pdf[cols].copy()
+                out["maybe_seen"] = ((bits[byte] & bit) != 0).all(axis=1)
+            if not insert:
+                return out
+            np.bitwise_or.at(bits, byte, bit)
+            tmp = os.path.join(path, f"v{new}", f".tmp-{uuid.uuid4().hex}-shard-{s}.npy")
+            np.save(tmp, bits)
+            os.replace(tmp, os.path.join(path, f"v{new}", f"shard-{s}.npy"))
+            ones = int(np.unpackbits(bits).sum())
+            if not probe:
+                return pd.DataFrame({"_shard_id": [s], "_shard_ones": [ones]})
+            out["_shard_id"], out["_shard_ones"] = s, ones
             return out
 
         shard_col = F.pmod(F.col(key_col), F.lit(n_shards))
         # groupBy(shard) is the single shuffle; each group touches one shard file
         return df.groupBy(shard_col.alias("_shard")).applyInPandas(
-            lambda key, pdf: _check(pdf), schema=schema
+            lambda _key, pdf: _pass(pdf), schema=schema
         )
 
+    def _insert(self, df: DataFrame, key_col: str, m_bits_fresh: int | None) -> int:
+        ver = self.current_version()
+        touched = {
+            int(r["_shard_id"]): int(r["_shard_ones"])
+            for r in self._shard_pass(df, key_col, False, True, m_bits_fresh).collect()
+        }
+        m_bits = m_bits_fresh or self.m_bits_of(ver)
+        return self._commit_version(
+            ver + 1, m_bits, touched, base=None if m_bits_fresh else ver
+        )
+
+    def prefilter_spark(self, df: DataFrame, key_col: str = "url_key") -> DataFrame:
+        """df + boolean ``maybe_seen``. One shuffle on shard; each task reads
+        only its shard's bits. Bloom-negatives are guaranteed-new."""
+        return self._shard_pass(df, key_col, probe=True, insert=False)
+
     def check_add_spark(self, df: DataFrame, key_col: str = "url_key") -> DataFrame:
-        """Fused membership-test + insert in ONE shard shuffle: each task
-        loads its shard's bits, records every key's membership BEFORE the
-        insert, sets the key's bits, and writes the shard into version v+1
-        — the work of ``prefilter_spark`` + ``add_spark`` for the price of
-        one shuffle and one bitmap pass (the payload-commit gate probes and
-        then inserts the SAME keys every epoch).
+        """``prefilter_spark`` + ``add_spark`` in ONE shard shuffle and one
+        bitmap pass (the payload-commit gate probes and then inserts the
+        SAME keys every epoch).
 
         Returns a PERSISTED DataFrame of the input rows + boolean
         ``maybe_seen`` (membership at the OLD version; the caller
@@ -353,66 +358,17 @@ class BloomShards:
         version and the bit-set/tmp-replace write is idempotent."""
         from pyspark.storagelevel import StorageLevel
 
-        path, k, n_shards = self.path, self.k, self.n_shards
         ver = self.current_version()
-        m_bits = self.m_bits_of(ver)
-        new = ver + 1
-        os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
-        cols = df.columns
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [
-                T.StructField("maybe_seen", T.BooleanType()),
-                T.StructField("_shard_id", T.IntegerType()),
-                T.StructField("_shard_ones", T.LongType()),
-            ]
-        )
-
-        def _check_add(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = pdf[key_col].to_numpy(dtype=np.int64)
-            s = int(keys[0] % n_shards)
-            s = s + n_shards if s < 0 else s
-            bits = np.load(os.path.join(path, f"v{ver}", f"shard-{s}.npy")).copy()
-            pos = _positions(keys, k, m_bits)
-            hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            tmp = os.path.join(path, f"v{new}", f".tmp-{uuid.uuid4().hex}-shard-{s}.npy")
-            np.save(tmp, bits)
-            os.replace(tmp, os.path.join(path, f"v{new}", f"shard-{s}.npy"))
-            out = pdf[cols].copy()
-            out["maybe_seen"] = hit.all(axis=1)
-            out["_shard_id"] = s
-            out["_shard_ones"] = int(np.unpackbits(bits).sum())
-            return out
-
-        shard_col = F.pmod(F.col(key_col), F.lit(n_shards))
-        out = (
-            df.groupBy(shard_col.alias("_shard"))
-            .applyInPandas(lambda key, pdf: _check_add(pdf), schema=schema)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        out = self._shard_pass(df, key_col, probe=True, insert=True).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
         # this collect MATERIALIZES the cache — the side-effecting tasks run
         # exactly once; everything after reads the cached rows
-        touched = (
-            out.groupBy("_shard_id").agg(F.max("_shard_ones").alias("ones")).collect()
-        )
-        fills = {
-            int(s): int(v)
-            for s, v in self._read_vmeta(ver).get("fills", {}).items()
+        touched = {
+            int(r["_shard_id"]): int(r["ones"])
+            for r in out.groupBy("_shard_id").agg(F.max("_shard_ones").alias("ones")).collect()
         }
-        touched_set = set()
-        for r in touched:
-            fills[int(r["_shard_id"])] = int(r["ones"])
-            touched_set.add(int(r["_shard_id"]))
-        for s in range(n_shards):
-            if s not in touched_set:
-                src, dst = self._shard_file(ver, s), self._shard_file(new, s)
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copyfile(src, dst)
-        self._write_vmeta(new, m_bits, fills)
-        self._write_pointer(self.path, new)
+        self._commit_version(ver + 1, self.m_bits_of(ver), touched, base=ver)
         # the PERSISTED node itself is returned (unpersist works on it);
         # callers ignore the _shard_* bookkeeping columns
         return out
@@ -420,48 +376,19 @@ class BloomShards:
     def add_spark(self, df: DataFrame, key_col: str = "url_key") -> int:
         """Distributed insert: shuffle keys to their shard, each task rewrites
         exactly one shard file into version v+1; untouched shards hardlinked;
-        pointer committed by the driver (atomic)."""
-        path, k, n_shards = self.path, self.k, self.n_shards
-        ver = self.current_version()
-        m_bits = self.m_bits_of(ver)
-        new = ver + 1
-        os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
+        pointer committed by the driver (atomic). Returns the new version."""
+        return self._insert(df, key_col, None)
 
-        def _update(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = pdf[key_col].to_numpy(dtype=np.int64)
-            s = int(keys[0] % n_shards)
-            s = s + n_shards if s < 0 else s
-            bits = np.load(os.path.join(path, f"v{ver}", f"shard-{s}.npy")).copy()
-            pos = _positions(keys, k, m_bits)
-            np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            tmp = os.path.join(path, f"v{new}", f".tmp-{uuid.uuid4().hex}-shard-{s}.npy")
-            np.save(tmp, bits)
-            os.replace(tmp, os.path.join(path, f"v{new}", f"shard-{s}.npy"))
-            return pd.DataFrame(
-                {"shard": [s], "ones": [int(np.unpackbits(bits).sum())]}
-            )
-
-        shard_col = F.pmod(F.col(key_col), F.lit(n_shards))
-        touched = (
-            df.select(key_col)
-            .groupBy(shard_col.alias("_shard"))
-            .applyInPandas(lambda key, pdf: _update(pdf), schema="shard int, ones long")
-            .collect()
-        )
-        fills = {
-            int(s): int(v)
-            for s, v in self._read_vmeta(ver).get("fills", {}).items()
-        }
-        for r in touched:
-            fills[r["shard"]] = r["ones"]
-        touched_set = {r["shard"] for r in touched}
-        for s in range(n_shards):
-            if s not in touched_set:
-                src, dst = self._shard_file(ver, s), self._shard_file(new, s)
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copyfile(src, dst)
-        self._write_vmeta(new, m_bits, fills)
-        self._write_pointer(self.path, new)
-        return new
+    def rebuild_spark(
+        self, df: DataFrame, key_col: str = "url_key", m_bits_new: int | None = None
+    ) -> int:
+        """Re-size/rebuild: distributed re-insert of the FULL key set (the
+        seen table — the durable source of truth) into a fresh bit space as
+        version v+1. Old versions keep their own m_bits (``_vmeta.json``),
+        so the engine's rollback window stays intact. Default sizing targets
+        ≤0.25 max fill with 2× headroom: m = next_pow2(7·k·n̂)."""
+        if m_bits_new is None:
+            n_est = max(self.estimated_keys(), 1)
+            target = 7 * self.k * n_est
+            m_bits_new = 1 << max(int(target - 1).bit_length(), 10)
+        return self._insert(df, key_col, m_bits_new)

@@ -303,10 +303,10 @@ class SnapTable:
 
         ``direct=True`` keeps proper bucket directories but SKIPS the
         repartition: each input partition writes straight into the bucket
-        dirs it has rows for (partitionBy handles the fan-out). For payload
-        tables whose insert path already paid a shuffle upstream (the
-        images commit's key dedup), this avoids shuffling the binary
-        payload a second time just to co-locate writers; the cost is more,
+        dirs it has rows for (partitionBy handles the fan-out). Every
+        merge-on-read write takes it: those batches already paid a shuffle
+        upstream (the commit's key dedup), so the binary payload is not
+        shuffled a second time just to co-locate writers; the cost is more,
         smaller files per bucket — bounded by tasks × buckets and folded
         back by compact()/vacuum()."""
         for name, expr in self.derived.items():
@@ -536,7 +536,6 @@ class SnapTable:
         touched_hint: str | None = None,
         source_parts: list[str] | None = None,
         mostly_new: bool = False,
-        insert_direct: bool = False,
         mor: bool = False,
     ) -> int:
         """Upsert ``updates`` by key (or delete their keys if ``delete``).
@@ -596,6 +595,11 @@ class SnapTable:
         overlay rewrite. Without this, uniformly-hashed new keys touch every
         bucket and the merge rewrites the WHOLE table every epoch — O(table)
         per epoch, the exact growth the sustained-crawl campaign measures.
+
+        ``mor=True`` (merge-on-read upsert): the batch is appended as new
+        files, written direct (see ``_write_data_files``), plus one
+        equality-delete entry holding its keys; an empty batch writes no
+        file and adds no delete entry.
         """
         parent = self.current_snapshot_id()
         prev_m = self._load_manifest(parent) if parent >= 0 else {"files": []}
@@ -622,7 +626,7 @@ class SnapTable:
             # the first-epoch shape of every payload table (images/records)
             # and measurably dominated the epoch commit tail at 10^6 rows.
             sid = parent + 1
-            new_files = self._write_data_files(updates, sid, direct=insert_direct)
+            new_files = self._write_data_files(updates, sid, direct=mor)
             return self._commit("merge", new_files, summary)
         from pyspark.storagelevel import StorageLevel
 
@@ -668,12 +672,17 @@ class SnapTable:
             # matching key is suppressed at read time; the batch's own rows
             # (file seq == delete seq) survive. Write cost is O(batch)
             # regardless of how many keys match (refresh crawls re-crawl
-            # entire epochs: rewrite-on-match would be O(table) per epoch).
+            # entire epochs: rewrite-on-match would be O(table) per epoch),
+            # and the write is direct (no second shuffle of the payload).
             # The read tax is one narrow join bounded by compaction cadence
             # (compact()/overwrite fold deletes back to zero). Caller MUST
             # supply key-distinct updates (two same-key rows at one seq
             # would both survive).
-            new_files = self._write_data_files(updates, sid, direct=insert_direct)
+            new_files = self._write_data_files(updates, sid, direct=True)
+            if not new_files:
+                # an empty batch supersedes nothing: a delete entry here
+                # would only add a read-time join and count toward vacuum()
+                return self._commit("merge", prev_files, summary)
             del_rel = os.path.join("data", f"s{sid}", "_eq_deletes")
             (
                 self.spark.read.schema(self.schema_ddl)
@@ -704,9 +713,7 @@ class SnapTable:
                     matched_buckets.add(-1)
                 if not matched_buckets:
                     # steady state: nothing matched anywhere — pure append
-                    new_files = self._write_data_files(
-                        updates, sid, direct=insert_direct
-                    )
+                    new_files = self._write_data_files(updates, sid)
                     return self._commit("merge", prev_files + new_files, summary)
                 hit_paths = {
                     f["path"]
@@ -773,15 +780,11 @@ class SnapTable:
 
     def read_keys_raw(self) -> DataFrame:
         """Key columns of ALL stored rows, WITHOUT merge-on-read resolution
-        (superseded keys included — a conservative superset). Used by the
-        engine's adopt check: resolving deletes there would stack a growing
-        join onto every epoch's check for no benefit, since a superseded
-        key being treated as 'matched' merely writes a harmless extra
-        delete entry."""
+        (superseded keys included — a conservative superset): the source
+        of the engine's payload-key Bloom rebuilds, where an extra key is
+        only an extra harmless positive."""
         sid = self.current_snapshot_id()
-        if sid < 0:
-            return self.spark.createDataFrame([], self.schema_ddl).select(*self.key_cols)
-        files = self._load_manifest(sid)["files"]
+        files = self._load_manifest(sid)["files"] if sid >= 0 else []
         if not files:
             return self.spark.createDataFrame([], self.schema_ddl).select(*self.key_cols)
         return self.spark.read.schema(self.schema_ddl).parquet(
@@ -794,39 +797,31 @@ class SnapTable:
         summary: dict | None = None,
         delete_keys_df: DataFrame | None = None,
     ) -> int:
-        """ZERO-COPY append: RENAME parquet files that some upstream stage
+        """ZERO-COPY append: HARD-LINK parquet files an upstream stage
         already wrote (the crawl epoch's staging output, partitioned by
         row_type) into the table as a new snapshot — the payload bytes are
-        written exactly ONCE per epoch; the commit is O(files) driver-side
-        metadata work plus the renames.
+        written exactly ONCE; the commit is O(files) driver-side metadata
+        plus the links. The sources stay in place (the caller decides
+        whether to keep them); a file that cannot be linked (another
+        filesystem) is copied. Each link lands under a unique temporary
+        name and is then replaced onto its final name, so an adopt re-run
+        over the leftovers of one that crashed before its manifest commit
+        overwrites them.
 
-        Caller contract (the engine verifies both with narrow key-column
-        jobs before calling): (1) the files' schema contains every table
-        column by name with compatible types — extra columns are pruned by
-        the explicit-schema read, missing ones read as NULL (derived
-        columns heal on read); (2) the rows' keys are distinct within the
-        batch AND absent from the current table (adopt is append-only —
-        a matched key would duplicate; the engine falls back to merge()).
+        Caller contract: the files hold every table column by name with a
+        compatible type (extra columns are pruned by the explicit-schema
+        read, missing ones read as NULL, derived columns heal on read), and
+        every key is either new to the table or in ``delete_keys_df`` —
+        written as an equality-delete entry at this sequence (merge-on-
+        read), superseding the key's OLDER stored rows. Keys duplicated
+        WITHIN the batch need an immediate ``merge(..., mor=True)`` of one
+        surviving row per such key (the engine's ADOPT+PATCH): its
+        higher-seq delete entry supersedes every adopted copy; without it
+        both copies survive reads.
 
-        Adopted files carry bucket -1 (their rows are not key-bucketed):
-        any later merge that finds genuinely matched keys treats them as
-        always-touched, and compact() folds them into proper buckets.
-
-        ``delete_keys_df`` (matched-key upsert, still zero-copy): keys whose
-        OLDER stored rows this batch supersedes — written as an
-        equality-delete entry at this sequence (merge-on-read), so adopt
-        stays an O(files)+O(matched) commit even when the batch collides
-        with existing keys. Contract (1) relaxes accordingly: matched keys
-        must all be in ``delete_keys_df``.
-
-        Contract (2) relaxes for the engine's ADOPT+PATCH pattern: a batch
-        MAY contain in-batch duplicate keys IF the caller immediately
-        follows the adopt with a ``merge(..., mor=True)`` of exactly one
-        surviving row per duplicated key — that merge's HIGHER-seq
-        equality-delete entry supersedes every adopted copy, so reads stay
-        key-distinct while the payload rewrite is O(duplicated keys), not
-        O(batch). Without the follow-up commit, duplicate adopted keys
-        would both survive reads."""
+        Adopted files carry bucket -1 (not key-bucketed): any later merge
+        that finds matched keys treats them as always-touched, and
+        compact() folds them into proper buckets."""
         import shutil as _sh
 
         parent = self.current_snapshot_id()
@@ -839,10 +834,12 @@ class SnapTable:
         for i, src in enumerate(sorted(src_paths)):
             rel = os.path.join("data", f"s{sid}", f"adopt-{i:05d}.parquet")
             dst = os.path.join(self.path, rel)
+            tmp = os.path.join(dest, f".adopt-{uuid.uuid4().hex}")
             try:
-                os.replace(src, dst)
+                os.link(src, tmp)
             except OSError:
-                _sh.move(src, dst)
+                _sh.copyfile(src, tmp)
+            os.replace(tmp, dst)
             e = {"path": rel, "bucket": -1}
             if self.stat_cols:
                 e["stats"] = self._file_stats(dst)

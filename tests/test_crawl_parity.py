@@ -65,7 +65,16 @@ def _run_engine(spark, workdir, per_host_budget):
     eng.seed_from_urls(_seeds())
     stats = eng.run(max_epochs=60)
     assert stats[-1]["drained"], "frontier must drain"
+    _assert_adopt_commits(stats)
     return eng, stats
+
+
+def _assert_adopt_commits(stats):
+    """Keeping staging must not change the payload commit path: the tables
+    checked here are committed by the adopt that every workload runs."""
+    assert any(st["payload_paths"] for st in stats), "no epoch committed payload"
+    for st in stats:
+        assert set(st["payload_paths"].values()) <= {"adopt", "adopt_patch"}, st
 
 
 def _engine_order(eng):
@@ -308,6 +317,7 @@ def test_schedule_and_request_spec_parity(spark, tmp_path):
     eng.seed_from_urls(seeds)
     st = eng.run_epoch()
     assert st["ok"] > 0, "search POSTs must succeed (S4 spec validated by fixture)"
+    _assert_adopt_commits([st])
 
     staged = spark.read.parquet(os.path.join(eng.workdir, "staging", "epoch=0"))
     rows = staged.filter(F.col("row_type") == "status").collect()

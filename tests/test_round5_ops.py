@@ -22,6 +22,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from biz_crawlers_spark.engine import crawl
 from biz_crawlers_spark.engine.crawl import CrawlEngine
 from biz_crawlers_spark.filters.bloom import BloomShards
 from biz_crawlers_spark.frontier.seed import synthetic_seed_df
@@ -469,60 +470,109 @@ def _delete_keys(table, sid: int, key: str) -> set:
     return {r[key] for r in df.collect()}
 
 
+_PAYLOAD = (("image", "images", "image_id"), ("record", "records", "entity_id"))
+
+
+def _replay_staging_mor(eng, part: str, name: str, key: str, dest) -> SnapTable:
+    """The payload commit's test-side reference: replay the engine's kept
+    staging partitions, epoch by epoch, through ``SnapTable.merge(mor=True)``
+    into a fresh table (key-distinct rows, as the commit members select)."""
+    t = getattr(eng, name)
+    ref = SnapTable.create(
+        eng.spark, str(dest), t.schema_ddl, t.key_cols, n_buckets=t.n_buckets,
+        derived=t.derived or None, stat_cols=t.stat_cols or None,
+    )
+    sdir = os.path.join(eng.workdir, "staging")
+    for d in sorted(os.listdir(sdir), key=lambda d: int(d.split("=")[1])):
+        rows = eng.spark.read.parquet(os.path.join(sdir, d)).filter(
+            F.col("row_type") == part
+        )
+        ref.merge(
+            rows.select(*ref._cols()).dropDuplicates([key]), dedupe=False, mor=True
+        )
+    return ref
+
+
+def _payload_tuples(images, records) -> dict:
+    return {
+        "images": sorted(
+            (r["image_id"], r["epoch"], r["phash"]) for r in images.read().collect()
+        ),
+        "records": sorted((r["entity_id"], r["epoch"]) for r in records.read().collect()),
+    }
+
+
 def test_payload_bloom_gate_superset_of_exact_scan(spark, tmp_path):
     """Through a fresh epoch + a full forced re-crawl, the Bloom gate's
     matched keys are a superset of the exact raw-key-scan reference, and the
-    adopted tables equal those of a keep_staging engine, which commits
-    through merge-on-read."""
-    payload = (("image", "images", "image_id"), ("record", "records", "entity_id"))
+    adopted tables equal a merge-on-read replay of the kept staging."""
+    eng = _engine(
+        spark, tmp_path / "eq", per_host_budget=10**9, fetch_salting=2,
+        keep_staging=True,
+    )
+    eng.add_seed_df(synthetic_seed_df(spark, 300, n_hosts=8))
+    eng.run_epoch()
+    _force_recrawl(eng)
+    raw_before = {
+        name: [r[key] for r in getattr(eng, name).read_keys_raw().collect()]
+        for _, name, key in _PAYLOAD
+    }
+    st = eng.run_epoch()
+    assert st["payload_paths"].get("image") == "adopt"
+    for part, name, key in _PAYLOAD:
+        t = getattr(eng, name)
+        sid = t.current_snapshot_id()
+        if st["payload_paths"][part] == "adopt_patch":
+            sid -= 1  # the patch commit follows the adopt
+        exact = _exact_matched_keys(spark, t, key, raw_before[name])
+        assert exact, name
+        gated = _delete_keys(t, sid, key)
+        assert exact <= gated, name
+        m = t._load_manifest(sid)
+        assert int(m["summary"]["matched"]) == len(gated)
+    ref = {
+        name: _replay_staging_mor(eng, part, name, key, tmp_path / f"ref_{name}")
+        for part, name, key in _PAYLOAD
+    }
+    assert _payload_tuples(eng.images, eng.records) == _payload_tuples(
+        ref["images"], ref["records"]
+    )
+
+
+def test_keep_staging_keeps_payload_files(spark, tmp_path):
+    """A keep_staging engine commits through the same adopt as a default
+    engine: its image/record staging files survive the commit (the adopt
+    links them), and its tables equal the default engine's."""
     results = {}
-    for mode, kw in (("bloom", {}), ("mor", {"keep_staging": True})):
+    for keep in (False, True):
         eng = _engine(
-            spark, tmp_path / f"eq_{mode}", per_host_budget=10**9,
-            fetch_salting=2, **kw,
+            spark, tmp_path / f"ks_{keep}", per_host_budget=10**9,
+            fetch_salting=2, keep_staging=keep,
         )
-        eng.add_seed_df(synthetic_seed_df(spark, 300, n_hosts=8))
-        eng.run_epoch()
-        _force_recrawl(eng)
-        raw_before = {
-            name: [r[key] for r in getattr(eng, name).read_keys_raw().collect()]
-            for _, name, key in payload
-        }
+        eng.add_seed_df(_collision_seed(spark))
         st = eng.run_epoch()
-        assert st["payload_paths"].get("image") == ("adopt" if mode == "bloom" else "mor")
-        if mode == "bloom":
-            for part, name, key in payload:
-                t = getattr(eng, name)
-                sid = t.current_snapshot_id()
-                if st["payload_paths"][part] == "adopt_patch":
-                    sid -= 1  # the patch commit follows the adopt
-                exact = _exact_matched_keys(spark, t, key, raw_before[name])
-                assert exact, name
-                gated = _delete_keys(t, sid, key)
-                assert exact <= gated, name
-                m = t._load_manifest(sid)
-                assert int(m["summary"]["matched"]) == len(gated)
-        results[mode] = {
-            "images": sorted(
-                (r["image_id"], r["epoch"], r["phash"])
-                for r in eng.images.read().collect()
-            ),
-            "records": sorted(
-                (r["entity_id"], r["epoch"])
-                for r in eng.records.read().collect()
-            ),
-        }
-    assert results["bloom"] == results["mor"]
+        assert st["payload_paths"]["record"] == "adopt_patch"
+        assert st["payload_paths"]["image"] in ("adopt", "adopt_patch")
+        staging = os.path.join(eng.workdir, "staging", "epoch=0")
+        assert os.path.isdir(staging) == keep
+        if keep:
+            for part in ("image", "record"):
+                d = os.path.join(staging, f"row_type={part}")
+                assert [f for f in os.listdir(d) if f.endswith(".parquet")], part
+            kept = spark.read.parquet(staging)
+            assert kept.filter(F.col("row_type") == "image").count() == st["images"]
+        results[keep] = _payload_tuples(eng.images, eng.records)
+    assert results[True] == results[False]
 
 
-def test_keybloom_false_positives_harmless(spark, tmp_path):
+def test_keybloom_false_positives_harmless(spark, tmp_path, monkeypatch):
     """A saturated (tiny) payload-key Bloom marks nearly every NEW key as
     'matched' — the spurious equality-delete keys must be no-ops: reads
     stay exact across epochs of disjoint URLs."""
+    monkeypatch.setattr(crawl, "BLOOM_REBUILD_FILL", 1.01)  # keep the FPR high
     eng = _engine(
         spark, tmp_path / "fp", per_host_budget=10**9, fetch_salting=2,
         bloom_bits=1 << 7,           # saturates after the first epoch
-        bloom_rebuild_fill=1.01,     # never rebuild: keep the FPR high
     )
     eng.add_seed_df(synthetic_seed_df(spark, 300, n_hosts=8))
     eng.run_epoch()
@@ -634,7 +684,7 @@ def test_adopt_patch_table_contract(spark, tmp_path):
     )
     t.merge(
         spark.createDataFrame([(2, 21)], "k long, v int"),
-        dedupe=False, mor=True, insert_direct=True,
+        dedupe=False, mor=True,
     )
     assert {r["k"]: r["v"] for r in t.read().collect()} == {1: 10, 2: 21, 3: 30}
     assert t.read().count() == 3
@@ -643,9 +693,9 @@ def test_adopt_patch_table_contract(spark, tmp_path):
 
 
 def test_adopt_patch_engine_equivalence(spark, tmp_path):
-    """adopt + O(dup) patch commit and a keep_staging engine's full-batch
-    merge-on-read commit produce identical record tables on a batch with
-    one in-batch duplicate entity_id."""
+    """The adopt + O(dup) patch commit and a full-batch merge-on-read
+    replay of the same staging produce identical record tables on a batch
+    with one in-batch duplicate entity_id."""
     from biz_crawlers_spark.fixtures.web import FixtureWeb
 
     web = FixtureWeb(seed=42, n_hosts=8, max_images_per_page=1)
@@ -657,29 +707,25 @@ def test_adopt_patch_engine_equivalence(spark, tmp_path):
     assert web.entity_for(urls[0])[0] == web.entity_for(urls[1])[0]
     assert all(web.classify(u) == "ok" for u in urls)
 
+    eng = _engine(
+        spark, tmp_path / "ap", per_host_budget=10**9, fetch_salting=2,
+        keep_staging=True,
+    )
+    eng.add_seed_df(_collision_seed(spark))
+    st = eng.run_epoch()
+    assert st["payload_paths"]["record"] == "adopt_patch"
+    ref = _replay_staging_mor(eng, "record", "records", "entity_id", tmp_path / "ref")
     results = {}
-    for patch in (True, False):
-        eng = _engine(
-            spark, tmp_path / f"ap_{patch}", per_host_budget=10**9,
-            fetch_salting=2, keep_staging=not patch,
-        )
-        eng.add_seed_df(_collision_seed(spark))
-        st = eng.run_epoch()
-        assert st["payload_paths"]["record"] == (
-            "adopt_patch" if patch else "mor"
-        )
-        recs = eng.records.read()
+    for side, t in (("patch", eng.records), ("mor", ref)):
+        recs = t.read()
         n = recs.count()
         assert recs.select("entity_id").distinct().count() == n
-        if patch:
-            # the adopt commit precedes the patch commit; its summary
-            # counts the duplicated keys
-            m = eng.records._load_manifest(eng.records.current_snapshot_id() - 1)
-            assert int(m["summary"].get("patched", 0)) >= 1
-        results[patch] = sorted(
-            (r["entity_id"], r["epoch"]) for r in recs.collect()
-        )
-    assert results[True] == results[False]
+        results[side] = sorted((r["entity_id"], r["epoch"]) for r in recs.collect())
+    # the adopt commit precedes the patch commit; its summary counts the
+    # duplicated keys
+    m = eng.records._load_manifest(eng.records.current_snapshot_id() - 1)
+    assert int(m["summary"].get("patched", 0)) >= 1
+    assert results["patch"] == results["mor"]
 
 
 def test_adopt_patch_with_recrawl_matches(spark, tmp_path):

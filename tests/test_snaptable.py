@@ -194,3 +194,39 @@ def test_insert_only_merge_fast_path_and_empty_delete(spark, tmp_path):
     assert _rows(t2.read()) == [
         ("a", "x2", "ad", 1), ("b", "y", "bd", 2), ("c", "z", None, None)
     ]
+
+
+def test_empty_mor_merge_adds_no_delete_entry(tbl, spark):
+    """A merge-on-read merge of an empty batch writes no data file, so it
+    supersedes nothing: the manifest's deletes list stays as it was (an
+    entry would add a read-time join and count toward vacuum's cadence)."""
+    tbl.append(spark.createDataFrame([("a", "x", "ad", 1), ("b", "y", "bd", 2)], DDL))
+    tbl.merge(spark.createDataFrame([("a", "x2", "ad", 1)], DDL), dedupe=False, mor=True)
+    before = tbl._load_manifest(tbl.current_snapshot_id()).get("deletes", [])
+    assert len(before) == 1
+    tbl.merge(spark.createDataFrame([], DDL), dedupe=False, mor=True)
+    m = tbl._load_manifest(tbl.current_snapshot_id())
+    assert m.get("deletes", []) == before
+    assert _rows(tbl.read()) == [("a", "x2", "ad", 1), ("b", "y", "bd", 2)]
+
+
+def test_adopt_links_and_overwrites_leftover(tbl, spark, tmp_path):
+    """adopt_files links the staging files in (the sources stay readable)
+    and replaces a leftover of an adopt that crashed before its manifest
+    commit: the table reads exactly the adopted rows."""
+    tbl.append(spark.createDataFrame([("a", "x", "ad", 1)], DDL))
+    stage = str(tmp_path / "stage")
+    batch = [("b", "y", "bd", 2), ("c", "z", "cd", 3)]
+    spark.createDataFrame(batch, DDL).coalesce(1).write.parquet(stage)
+    files = [os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")]
+    nxt = os.path.join(tbl.path, "data", f"s{tbl.current_snapshot_id() + 1}")
+    os.makedirs(nxt)
+    spark.createDataFrame([("junk", "j", "jd", 9)], DDL).coalesce(1).write.parquet(
+        str(tmp_path / "junk")
+    )
+    (junk,) = [f for f in os.listdir(tmp_path / "junk") if f.endswith(".parquet")]
+    os.rename(tmp_path / "junk" / junk, os.path.join(nxt, "adopt-00000.parquet"))
+    tbl.adopt_files(files)
+    assert _rows(tbl.read()) == [("a", "x", "ad", 1)] + batch
+    assert _rows(spark.read.parquet(*files)) == batch, "staging files stay in place"
+    assert not [f for f in os.listdir(nxt) if f.startswith(".adopt-")]
