@@ -15,6 +15,8 @@ runs under its own Spark job group and is timed into ``phase_sec``:
        TTL mode (D7) keeps only in-window keys as duplicates
   robots
     4. hosts missing from the robots cache are fetched in the workers (P8)
+       and appended to it; every robots read goes through the TTL-windowed
+       view (``_known_robots_hosts``)
   fetch_stage
     5. D9 routing (archive mode): one left join attaches the archived body to
        every batch row whose key has an ``ok`` page (search pages excepted)
@@ -25,8 +27,8 @@ runs under its own Spark job group and is timed into ``phase_sec``:
   stats_pass
     7. one aggregate over staging: lineage rows, epoch totals, order offsets
   commits
-    8. the ``c_*`` members, concurrently: images / records adopt (+ an
-       O(duplicates) patch), pages MoR merge, seen append, Bloom add, fused
+    8. the ``c_*`` members, concurrently: images / records gate + adopt
+       (+ an O(duplicates) patch), pages MoR merge, seen append, Bloom add, fused
        frontier MERGE (state transitions + dedup-done + discovered inserts),
        order_log append, lineage append — then the STATE RECORD, which
        makes the whole group atomic (resume() rolls back any table that is
@@ -37,11 +39,10 @@ The loop repeats until the frontier drains (early termination, §4.1).
 Three shuffles touch the wide path per epoch: the budget selection's two
 (one on (host, salt), one on host — both over the narrow frontier rows, the
 second over at most S·K rows per host) and the by-host repartition into the
-fetch stage; image bytes are shuffled once more only as the MERGE write into
-the images table (the sink itself). Per-epoch driver-sequenced
-jobs are consolidated: ONE stats pass over staging yields the lineage rows
-AND the epoch totals; merges persist their update plans so staging is never
-re-scanned twice per commit.
+fetch stage; image bytes are never shuffled (the payload tables adopt the
+staging files). Per-epoch driver-sequenced jobs are consolidated: ONE stats
+pass over staging yields the lineage rows AND the epoch totals, and each
+payload commit is ONE shard pass over its staged keys (the Bloom gate).
 
 Sustained-crawl design (per-epoch cost must be O(batch), never
 O(accumulated tables), or a long campaign decays):
@@ -53,8 +54,9 @@ O(accumulated tables), or a long campaign decays):
 - payload commits are ZERO-COPY in every mode: staging's row_type
   partitions are hard-linked into the table (staging stays intact until
   the commit group is done), with cross-epoch matched keys (if any) riding
-  the same commit as an equality-delete entry (merge-on-read); in-batch
-  duplicate keys (id collisions) add an O(duplicates) MoR patch commit.
+  the same commit as an equality-delete entry (merge-on-read) whose key
+  files the gate's shard pass wrote; in-batch duplicate keys (id
+  collisions) add an O(duplicates) MoR patch commit.
   The whole-table copy-on-write rewrite never happens, and the MoR read
   tax is folded by the vacuum compaction cadence
 - the order log derives from the sequence the fetch stage itself emits
@@ -447,13 +449,17 @@ class CrawlEngine:
         return n + n_actions
 
     def _known_robots_hosts(self, epoch: int) -> DataFrame:
-        """Hosts whose robots rules are cached AND inside the TTL window."""
+        """The windowed robots view every robots read goes through: ``host,
+        rules`` of the cached rows inside the TTL window. The table is
+        append-only and a host is fetched only when it has no in-window
+        row, so this view holds at most one row per host (without a TTL the
+        table itself stays key-unique)."""
         known = self.robots.read()
         if self.robots_ttl_epochs is not None:
             known = known.filter(
                 F.col("fetched_epoch") > epoch - self.robots_ttl_epochs
             )
-        return known.select("host")
+        return known.select("host", "rules")
 
     # ---------- the epoch ----------
 
@@ -592,15 +598,16 @@ class CrawlEngine:
         robots SnapTable (TTL-filtered when robots_ttl_epochs is set); the
         missing hosts fan out to a mapInPandas stage that fetches+parses
         robots.txt in the workers (engine/stage.py make_robots_stage), and
-        the result MERGEs into the robots table. The driver does O(1) work
-        per epoch — submit one job — regardless of host count. The robots
-        table is in the epoch's atomic commit group (TABLE_NAMES), so a
-        crash re-fetches cleanly.
+        the result is APPENDED to the robots table (one snapshot; a TTL
+        re-fetch leaves the expired row behind, outside the window of
+        ``_known_robots_hosts``, so no matched-key discovery is needed).
+        The driver does O(1) work per epoch regardless of host count. The
+        robots table is in the epoch's atomic commit group (TABLE_NAMES),
+        so a crash re-fetches cleanly.
 
         Runs only when select_dedup's fused aggregate proved at least one
         host is missing: the steady state — every host cached — plans ZERO
-        robots jobs. The merge itself persists the updates plan, so the
-        fetch stage runs exactly once."""
+        robots jobs."""
         if not ep.n_missing_hosts:
             return
         missing = (
@@ -611,14 +618,10 @@ class CrawlEngine:
         fetched = missing.repartition(self.fetch_partitions, "host").mapInPandas(
             make_robots_stage(self.web_params), "host string, rules string"
         )
-        self.robots.merge(
+        self.robots.append(
             fetched.withColumn("fetched_epoch", F.lit(ep.epoch)),
             summary={"op": "robots", "epoch": ep.epoch},
-            dedupe=False,  # hosts are distinct by construction
-            # anti-joined against the TTL-filtered known set → (nearly) all
-            # keys are new; expired re-fetches still overlay via the
-            # matched-key discovery pass
-            mostly_new=True,
+            bucketize=False,  # read whole through the windowed view
         )
 
     def _fetch_stage(self, ep: EpochContext) -> None:
@@ -631,10 +634,11 @@ class CrawlEngine:
         # pacing); throughput mode: range lanes kill the hot-host skew.
         # The fused output lands in a staging PARQUET (not .persist()): the
         # epoch then reads it several times (statuses/images/records/
-        # discovered/lineage) and columnar staging means every scan except
-        # the images MERGE prunes the bytes column away — a row-format cache
-        # would deserialize the payload bytes on every scan. The staging dir
-        # doubles as the raw-results archive of the epoch (K5 analog).
+        # discovered/lineage) and columnar staging means every scan prunes
+        # the bytes column away (the payload tables adopt the files) — a
+        # row-format cache would deserialize the payload bytes on every
+        # scan. The staging dir doubles as the raw-results archive of the
+        # epoch (K5 analog).
         stage = make_stage(
             self.web_params, self.budget, self.archive_pages, epoch=ep.epoch
         )
@@ -657,9 +661,7 @@ class CrawlEngine:
         # host per partition in-stage): a broadcast join for small robots
         # tables, a host-hash shuffle join at 10^6-host scale — never a
         # driver-side dict
-        to_fetch = to_fetch.join(
-            self.robots.read().select("host", "rules"), "host", "left"
-        )
+        to_fetch = to_fetch.join(self._known_robots_hosts(ep.epoch), "host", "left")
         # Lane layout: throughput mode uses RANGE lanes on (host, order key)
         # instead of hash-salted lanes. Range partitioning (a) balances the
         # 80%-skew host by SAMPLED row counts — no S>>P oversampling against
@@ -691,7 +693,8 @@ class CrawlEngine:
         # image/record partitions are pure payload files the payload tables
         # ADOPT by hard link — the epoch's bytes are written exactly once
         fetched_df.write.mode("overwrite").partitionBy("row_type").parquet(ep.staging)
-        ep.fetched = self.spark.read.parquet(ep.staging)
+        # the stage's own schema: inferring it would cost a job per epoch
+        ep.fetched = self.spark.read.schema(STAGE_DDL).parquet(ep.staging)
 
     def _stats_pass(self, ep: EpochContext) -> None:
         # ONE stats pass over staging — run before the commits: the collected
@@ -780,11 +783,12 @@ class CrawlEngine:
     # image_id/entity_id is brand new. Their ONE commit path is ZERO-COPY
     # ADOPT: the staging write already produced pure image/record parquet
     # files (row_type partitions, table column names, epoch + corrupt
-    # stamped in-stage), so after narrow key jobs find the batch's duplicate
-    # and matched keys, the commit just HARD-LINKS those files in
-    # (SnapTable.adopt_files) — the payload bytes are written exactly once
-    # per epoch and the commit cost is O(files) metadata, independent of both
-    # batch and table size.
+    # stamped in-stage), so after one Bloom-gate shard pass (one shuffle,
+    # one collect of a row per shard) writes the batch's matched and
+    # duplicate keys to files, the commit just HARD-LINKS the payload files
+    # and the matched-key files in (SnapTable.adopt_files) — the payload
+    # bytes are written exactly once per epoch and the commit cost is
+    # O(files) metadata, independent of both batch and table size.
 
     def c_images(self, ep: EpochContext) -> None:
         rows = ep.rows("image").select(
@@ -813,71 +817,49 @@ class CrawlEngine:
         if n_rows == 0 or not os.path.isdir(src):
             return  # nothing extracted: the table keeps its snapshot
         keybloom = self._payload_keyblooms[part_dir]
-        # ONE narrow key job yields the distinct count AND the in-batch
-        # duplicate keys; cached because the gate and the patch reuse it
-        cnt = (
-            ep.rows(part_dir)
-            .groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .withColumn("_kh", F.xxhash64(F.col(key)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        # ONE fused shard pass over the staged keys counts them, probes the
+        # payload-key Bloom (cross-epoch matches, O(batch), a conservative
+        # superset: false positives are harmless no-op deletes, see
+        # __init__), adds them, and writes the matched and in-batch
+        # duplicate keys as per-shard files; the driver collects one row per
+        # shard. The add landing even if a later step aborts the epoch is
+        # the documented harmless-lingering-positive case.
+        gate = keybloom.gate_spark(
+            ep.rows(part_dir), key, os.path.join(ep.staging, f"_gate_{part_dir}")
         )
-        gate = None
-        try:
-            agg = cnt.agg(
-                F.count(F.lit(1)).alias("_nd"),
-                F.coalesce(F.sum((F.col("_n") > 1).cast("long")), F.lit(0)).alias("_ndup"),
-            ).first()
-            n_dist, n_dup = int(agg["_nd"]), int(agg["_ndup"])
-            # cross-epoch matches become an equality-delete entry riding the
-            # adopt commit, found by probing the batch keys against the
-            # maintained payload-key Bloom — O(batch), a conservative
-            # superset (false positives are harmless no-op deletes, see
-            # __init__). FUSED probe+insert: one shard shuffle yields the
-            # membership test AND the Bloom add; the add landing even if a
-            # later step aborts the epoch is the documented
-            # harmless-lingering-positive case.
-            files = [
-                os.path.join(src, fn) for fn in os.listdir(src) if fn.endswith(".parquet")
-            ]
-            gate = keybloom.check_add_spark(cnt, "_kh")
-            matched = None
-            n_matched = 0
-            if not table.is_empty():
-                matched = gate.filter(F.col("maybe_seen")).select(key)
-                n_matched = matched.count()
-            table.adopt_files(
-                files,
-                summary={
-                    "epoch": ep.epoch, "adopted": True,
-                    "matched": n_matched, "patched": n_dup,
-                },
-                delete_keys_df=matched if n_matched else None,
+        n_dup = gate["n_dup"]
+        # an empty table cannot hold a match (rolled-back keys linger)
+        matched = [] if table.is_empty() else gate["matched"]
+        table.adopt_files(
+            [os.path.join(src, fn) for fn in os.listdir(src) if fn.endswith(".parquet")],
+            summary={
+                "epoch": ep.epoch, "adopted": True,
+                "matched": gate["n_matched"] if matched else 0, "patched": n_dup,
+            },
+            delete_key_files=matched,
+        )
+        if n_dup:
+            # ADOPT + PATCH: a few in-batch duplicate keys must not force
+            # a full-batch byte rewrite. One row per duplicated key
+            # (df_rows is key-distinct) lands as a tiny MoR commit whose
+            # higher-seq equality-delete entry supersedes every adopted
+            # copy: O(n_dup) payload written; the dead adopted copies
+            # fold out at the vacuum/compaction cadence. Staging is
+            # still intact (the adopt links), so the rows read lazily.
+            dup_keys = self.spark.read.schema(df_rows.select(key).schema).parquet(
+                *gate["dups"]
             )
-            if n_dist < n_rows:
-                # ADOPT + PATCH: a few in-batch duplicate keys must not force
-                # a full-batch byte rewrite. One row per duplicated key
-                # (df_rows is key-distinct) lands as a tiny MoR commit whose
-                # higher-seq equality-delete entry supersedes every adopted
-                # copy: O(n_dup) payload written; the dead adopted copies
-                # fold out at the vacuum/compaction cadence. Staging is
-                # still intact (the adopt links), so the rows read lazily.
-                dup_keys = cnt.filter(F.col("_n") > 1).select(key)
-                table.merge(
-                    df_rows.join(F.broadcast(dup_keys), key, "left_semi"),
-                    summary={"epoch": ep.epoch, "mor": True, "patch": True},
-                    dedupe=False, mor=True,
-                )
-            self._rebuild_if_saturated(
-                keybloom,
-                lambda: table.read_keys_raw().select(F.xxhash64(F.col(key)).alias("_kh")),
-                "_kh",
+            table.merge(
+                df_rows.join(F.broadcast(dup_keys), key, "left_semi"),
+                summary={"epoch": ep.epoch, "mor": True, "patch": True},
+                dedupe=False, mor=True,
             )
-            ep.payload_paths[part_dir] = "adopt" if n_dist == n_rows else "adopt_patch"
-        finally:
-            if gate is not None:
-                gate.unpersist()
-            cnt.unpersist()
+        self._rebuild_if_saturated(
+            keybloom,
+            lambda: table.read_keys_raw().select(F.xxhash64(F.col(key)).alias("_kh")),
+            "_kh",
+        )
+        ep.payload_paths[part_dir] = "adopt_patch" if n_dup else "adopt"
 
     def c_pages(self, ep: EpochContext) -> None:
         page_rows = (

@@ -30,8 +30,10 @@ memory per run (GCISCrawler.php:484-511) — with a structure that scales:
 
 Spark integration keeps everything co-partitioned by shard: one shuffle on
 (shard), then applyInPandas groups load/update exactly one shard file each
-— one kernel (``_shard_pass``) for probe, insert and rebuild, one version
-commit (``_commit_version``) for every new version.
+— one kernel (``_shard_pass``) for probe, insert, rebuild and the
+payload-commit gate (``gate_spark``: count, probe, insert, and write the
+matched and duplicate keys as per-shard files in the same pass), one
+version commit (``_commit_version``) for every new version.
 
 SIZING KNOB: ``n_shards`` caps the prefilter/insert parallelism (one task
 per shard), so set it to at least the executor-core count of the target
@@ -50,6 +52,8 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -266,40 +270,47 @@ class BloomShards:
     # ---------- Spark API (co-partitioned by shard) ----------
 
     def _shard_pass(
-        self, df: DataFrame, key_col: str, probe: bool, insert: bool,
-        m_bits_fresh: int | None = None,
+        self, df: DataFrame, key_col: str, insert: bool,
+        m_bits_fresh: int | None = None, gate: tuple[str, str] | None = None,
     ) -> DataFrame:
         """The shard kernel of every Spark method: one shuffle on the shard;
         each group loads its shard's bits (zeros of ``m_bits_fresh`` for a
-        rebuild), optionally records each key's membership BEFORE the
-        insert, optionally sets the keys' bits and writes the shard into
-        version v+1 (tmp + replace, so a retried task rewrites one file).
-        Returns the input rows + ``maybe_seen`` when probing (+ the
-        ``_shard_*`` bookkeeping when also inserting), else one
-        ``(_shard_id, _shard_ones)`` row per shard. ``_commit_version``
-        finishes an inserted version."""
+        rebuild) and either probes them (the input rows + ``maybe_seen``)
+        or, when inserting, sets the keys' bits and writes the shard into
+        version v+1 (tmp + replace, so a retried task rewrites one file),
+        returning one ``(_shard_id, _shard_ones)`` row per shard;
+        ``_commit_version`` finishes the version.
+
+        ``gate=(raw_key_col, out_dir)`` makes an insert the payload-commit
+        gate: each group also counts its raw keys, probes their distinct
+        hashes BEFORE setting the bits, writes the matched and the in-batch
+        duplicate raw keys (sorted, so a retry writes the same bytes) to
+        ``{out_dir}/{matched,dups}/shard-{s}.parquet`` (tmp + replace; no
+        file when empty), and adds ``n_distinct, n_dup, n_matched``."""
         path, k, n_shards = self.path, self.k, self.n_shards
         ver = self.current_version()
         m_bits = m_bits_fresh or self.m_bits_of(ver)
         new = ver + 1
-        if insert:
-            os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
-        book = [
-            T.StructField("_shard_id", T.IntegerType()),
-            T.StructField("_shard_ones", T.LongType()),
-        ]
-        if probe:
+        if not insert:
             cols = df.columns
             # fresh StructType — .add() would mutate the DataFrame's cached schema
             schema = T.StructType(
-                list(df.schema.fields)
-                + [T.StructField("maybe_seen", T.BooleanType())]
-                + (book if insert else [])
+                list(df.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
             )
         else:
-            df, schema = df.select(key_col), T.StructType(book)
+            os.makedirs(os.path.join(path, f"v{new}"), exist_ok=True)
+            schema = "_shard_id int, _shard_ones long"
+            df = df.select(key_col, *gate[:1] if gate else [])
+        if gate:
+            raw, out_dir = gate
+            schema += ", n_distinct long, n_dup long, n_matched long"
+            for sub in ("matched", "dups"):
+                os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
 
         def _pass(pdf: pd.DataFrame) -> pd.DataFrame:
+            if gate:
+                counts = pdf[raw].value_counts()
+                pdf = pdf.drop_duplicates(raw)
             keys = pdf[key_col].to_numpy(dtype=np.int64)
             s = int(keys[0] % n_shards)  # numpy remainder: same sign as pmod
             if m_bits_fresh:
@@ -308,20 +319,25 @@ class BloomShards:
                 bits = np.load(os.path.join(path, f"v{ver}", f"shard-{s}.npy"))
             pos = _positions(keys, k, m_bits)
             byte, bit = pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-            if probe:
-                out = pdf[cols].copy()
-                out["maybe_seen"] = ((bits[byte] & bit) != 0).all(axis=1)
+            if not insert or gate:
+                seen = ((bits[byte] & bit) != 0).all(axis=1)
             if not insert:
-                return out
+                return pdf[cols].assign(maybe_seen=seen)
             np.bitwise_or.at(bits, byte, bit)
             tmp = os.path.join(path, f"v{new}", f".tmp-{uuid.uuid4().hex}-shard-{s}.npy")
             np.save(tmp, bits)
             os.replace(tmp, os.path.join(path, f"v{new}", f"shard-{s}.npy"))
-            ones = int(np.unpackbits(bits).sum())
-            if not probe:
-                return pd.DataFrame({"_shard_id": [s], "_shard_ones": [ones]})
-            out["_shard_id"], out["_shard_ones"] = s, ones
-            return out
+            row = {"_shard_id": [s], "_shard_ones": [int(np.unpackbits(bits).sum())]}
+            if gate:
+                matched, dups = pdf[raw][seen], counts.index[counts > 1]
+                for sub, ks in (("matched", matched), ("dups", dups)):
+                    if len(ks):
+                        dest = os.path.join(out_dir, sub, f"shard-{s}.parquet")
+                        tmp = f"{os.path.dirname(dest)}/.tmp-{uuid.uuid4().hex}"
+                        pq.write_table(pa.table({raw: sorted(ks)}), tmp)
+                        os.replace(tmp, dest)
+                row.update(n_distinct=[len(pdf)], n_dup=[len(dups)], n_matched=[len(matched)])
+            return pd.DataFrame(row)
 
         shard_col = F.pmod(F.col(key_col), F.lit(n_shards))
         # groupBy(shard) is the single shuffle; each group touches one shard file
@@ -329,55 +345,50 @@ class BloomShards:
             lambda _key, pdf: _pass(pdf), schema=schema
         )
 
-    def _insert(self, df: DataFrame, key_col: str, m_bits_fresh: int | None) -> int:
+    def _insert(
+        self, df: DataFrame, key_col: str, m_bits_fresh: int | None = None,
+        gate: tuple[str, str] | None = None,
+    ) -> list:
+        """Run an inserting shard pass, commit version v+1, return its rows."""
         ver = self.current_version()
-        touched = {
-            int(r["_shard_id"]): int(r["_shard_ones"])
-            for r in self._shard_pass(df, key_col, False, True, m_bits_fresh).collect()
-        }
-        m_bits = m_bits_fresh or self.m_bits_of(ver)
-        return self._commit_version(
-            ver + 1, m_bits, touched, base=None if m_bits_fresh else ver
+        rows = self._shard_pass(df, key_col, True, m_bits_fresh, gate).collect()
+        self._commit_version(
+            ver + 1, m_bits_fresh or self.m_bits_of(ver),
+            {int(r["_shard_id"]): int(r["_shard_ones"]) for r in rows},
+            base=None if m_bits_fresh else ver,
         )
+        return rows
 
     def prefilter_spark(self, df: DataFrame, key_col: str = "url_key") -> DataFrame:
         """df + boolean ``maybe_seen``. One shuffle on shard; each task reads
         only its shard's bits. Bloom-negatives are guaranteed-new."""
-        return self._shard_pass(df, key_col, probe=True, insert=False)
+        return self._shard_pass(df, key_col, insert=False)
 
-    def check_add_spark(self, df: DataFrame, key_col: str = "url_key") -> DataFrame:
-        """``prefilter_spark`` + ``add_spark`` in ONE shard shuffle and one
-        bitmap pass (the payload-commit gate probes and then inserts the
-        SAME keys every epoch).
-
-        Returns a PERSISTED DataFrame of the input rows + boolean
-        ``maybe_seen`` (membership at the OLD version; the caller
-        unpersists). The new version's pointer is committed before this
-        returns, so the result must only be read from the cache. Task
-        retries are safe: membership is computed from the immutable old
-        version and the bit-set/tmp-replace write is idempotent."""
-        from pyspark.storagelevel import StorageLevel
-
-        ver = self.current_version()
-        out = self._shard_pass(df, key_col, probe=True, insert=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # this collect MATERIALIZES the cache — the side-effecting tasks run
-        # exactly once; everything after reads the cached rows
-        touched = {
-            int(r["_shard_id"]): int(r["ones"])
-            for r in out.groupBy("_shard_id").agg(F.max("_shard_ones").alias("ones")).collect()
-        }
-        self._commit_version(ver + 1, self.m_bits_of(ver), touched, base=ver)
-        # the PERSISTED node itself is returned (unpersist works on it);
-        # callers ignore the _shard_* bookkeeping columns
+    def gate_spark(self, df: DataFrame, key_col: str, out_dir: str) -> dict:
+        """The payload-commit gate in ONE shard pass: the raw ``key_col``
+        (any type) is keyed by ``xxhash64``, so a 64-bit collision is just
+        another conservative positive. Probes every distinct key against
+        the current version, inserts them all as version v+1 and writes the
+        matched and in-batch duplicate keys as per-shard parquet files under
+        ``out_dir`` (see ``_shard_pass``). Returns the totals ``n_distinct,
+        n_dup, n_matched`` and the ``matched`` and ``dups`` file lists; the
+        driver collects one row per shard, never the keys. Task retries are
+        safe: membership comes from the immutable old version and every
+        write is an idempotent replace."""
+        hashed = df.select(key_col, F.xxhash64(F.col(key_col)).alias("_kh"))
+        rows = self._insert(hashed, "_kh", gate=(key_col, out_dir))
+        out = {n: sum(r[n] for r in rows) for n in ("n_distinct", "n_dup", "n_matched")}
+        for sub, n in (("matched", "n_matched"), ("dups", "n_dup")):
+            out[sub] = [os.path.join(out_dir, sub, f"shard-{r['_shard_id']}.parquet")
+                        for r in rows if r[n]]
         return out
 
     def add_spark(self, df: DataFrame, key_col: str = "url_key") -> int:
         """Distributed insert: shuffle keys to their shard, each task rewrites
         exactly one shard file into version v+1; untouched shards hardlinked;
         pointer committed by the driver (atomic). Returns the new version."""
-        return self._insert(df, key_col, None)
+        self._insert(df, key_col)
+        return self.current_version()
 
     def rebuild_spark(
         self, df: DataFrame, key_col: str = "url_key", m_bits_new: int | None = None
@@ -391,4 +402,5 @@ class BloomShards:
             n_est = max(self.estimated_keys(), 1)
             target = 7 * self.k * n_est
             m_bits_new = 1 << max(int(target - 1).bit_length(), 10)
-        return self._insert(df, key_col, m_bits_new)
+        self._insert(df, key_col, m_bits_new)
+        return self.current_version()

@@ -78,9 +78,13 @@ def _marker_job(spark, group: str) -> int:
 def test_steady_state_jobs_fall_in_phase_or_member_groups(spark, tmp_path):
     """Every Spark job a steady-state epoch (seen set non-empty, every host's
     robots rules cached) submits belongs to one of the five phase groups or
-    one commit-member group — none runs untagged."""
+    one commit-member group — none runs untagged. Pins the job budget of
+    the payload commits (a fused Bloom-gate pass each) and of the robots
+    phase of the first, all-new-host epoch (an append, no merge); later
+    changes may lower these pins, never raise them."""
     eng = _engine(spark, tmp_path / "groups", per_host_budget=100)
     eng.add_seed_df(synthetic_seed_df(spark, 600, n_hosts=8))
+    lo0 = _marker_job(spark, "test_epoch0_start")
     assert eng.run_epoch()["fetched"] > 0
 
     lo = _marker_job(spark, "test_epoch_start")
@@ -101,6 +105,9 @@ def test_steady_state_jobs_fall_in_phase_or_member_groups(spark, tmp_path):
         f"untagged: {sorted(set(tracker.getJobIdsForGroup(None)) & epoch_jobs)}"
     )
     assert not by_group["robots"], "a steady-state epoch plans no robots job"
+    assert len(by_group["c_images"]) <= 2 and len(by_group["c_records"]) <= 2
+    new_host_robots = set(tracker.getJobIdsForGroup("robots")) & set(range(lo0 + 1, lo))
+    assert 0 < len(new_host_robots) <= 3
     print("jobs per group:", {g: len(ids) for g, ids in by_group.items()})
 
 

@@ -3,8 +3,9 @@
 - robots.txt is resolved by a distributed pre-pass into the robots SnapTable:
   the driver performs ZERO robots fetches (proven by poisoning the
   driver-side FixtureWeb.fetch — worker processes re-import the module, so
-  only a driver-side call would hit the poison), one merge per epoch with new
-  hosts, none afterwards, TTL re-fetch when configured.
+  only a driver-side call would hit the poison), one append per epoch with new
+  hosts, none afterwards, TTL re-fetch when configured (read through the
+  engine's TTL-windowed view).
 - the engine is not fixture-welded: a dict-backed DictTransport built by
   snapshotting FixtureWeb's behavior passes the schedule/request-spec parity
   test unchanged (same assertions, same budget, same seeds).
@@ -90,29 +91,59 @@ def test_robots_distributed_o1_driver(spark, tmp_path, monkeypatch):
 
 
 def test_robots_ttl_refetch(spark, tmp_path):
-    """robots_ttl_epochs: rules older than the TTL re-fetch (fetched_epoch
-    advances); within the TTL they do not."""
+    """robots_ttl_epochs: rules older than the TTL re-fetch; within the TTL
+    they do not. The current rules are read through the engine's windowed
+    view (the robots table is append-only, so an expired row stays behind
+    in the raw table)."""
     seeds = company_seed(114, 3)
     eng = _engine(spark, tmp_path / "ttl", robots_ttl_epochs=3, ttl_epochs=1)
     eng.seed_from_urls(seeds)
     eng.run(max_epochs=5)
     sid = eng.robots.current_snapshot_id()
-    first = {r["host"]: r["fetched_epoch"] for r in eng.robots.read().collect()}
+    first = {
+        r["host"]: r["rules"]
+        for r in eng._known_robots_hosts(eng.current_epoch()).collect()
+    }
+    assert first
 
     # inside the TTL window: reseed → no robots re-fetch
     eng.reseed_from_urls(seeds)
     eng.run_epoch()
     assert eng.robots.current_snapshot_id() == sid
 
-    # jump past the TTL: every host re-fetches, fetched_epoch advances
+    # jump past the TTL: every host re-fetches at the jump epoch
     jump = eng.current_epoch() + 10
     eng._record_state(jump)
     eng.reseed_from_urls(seeds)
     eng.run_epoch()
-    after = {r["host"]: r["fetched_epoch"] for r in eng.robots.read().collect()}
-    assert set(after) == set(first)
-    assert all(after[h] == jump for h in after)
+    after = {r["host"]: r["rules"] for r in eng._known_robots_hosts(jump).collect()}
+    assert after == first
+    fresh = eng.robots.read().filter(F.col("fetched_epoch") == jump)
+    assert {r["host"] for r in fresh.collect()} == set(first)
     assert eng.robots.current_snapshot_id() > sid
+
+
+def test_robots_ttl_view_key_unique_and_fresh(spark, tmp_path):
+    """After a TTL re-fetch the append-only table holds every host twice
+    and the windowed view once, and the fetch stage joins only the fresh
+    rules: expired rows rewritten to deny everything deny nothing."""
+    seeds = company_seed(114, 3)
+    eng = _engine(spark, tmp_path / "ttlv", robots_ttl_epochs=3, ttl_epochs=1)
+    eng.seed_from_urls(seeds)
+    eng.run(max_epochs=5)
+    deny_all = '["D:/"]'
+    eng.robots.overwrite(eng.robots.read().withColumn("rules", F.lit(deny_all)))
+    jump = eng.current_epoch() + 10
+    eng._record_state(jump)
+    eng.reseed_from_urls(seeds)
+    st = eng.run_epoch()
+    view = eng._known_robots_hosts(jump).collect()
+    hosts = [r["host"] for r in view]
+    assert len(hosts) == len(set(hosts)) > 0
+    assert eng.robots.read().count() == 2 * len(hosts)
+    assert all(r["rules"] != deny_all for r in view)
+    assert st["fetched"] > 0
+    assert st["fetched"] + st["robots_denied"] + st["deduped"] == st["selected"]
 
 
 def test_dict_transport_unit():

@@ -676,12 +676,18 @@ def test_adopt_patch_table_contract(spark, tmp_path):
     files = [
         os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")
     ]
-    # key 1 matches the stored table (cross-epoch delete entry); key 2 is
-    # the in-batch duplicate the patch supersedes
-    t.adopt_files(
-        files, summary={"patched": 1},
-        delete_keys_df=spark.createDataFrame([(1,)], "k long"),
-    )
+    # key 1 matches the stored table (a cross-epoch delete entry linked
+    # from a key file, as the payload gate writes them); key 2 is the
+    # in-batch duplicate the patch supersedes
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key_file = str(tmp_path / "matched-keys.parquet")
+    pq.write_table(pa.table({"k": pa.array([1], pa.int64())}), key_file)
+    t.adopt_files(files, summary={"patched": 1}, delete_key_files=[key_file])
+    assert os.path.exists(key_file), "the key file is linked, not moved"
+    (entry,) = t._load_manifest(t.current_snapshot_id())["deletes"]
+    assert os.listdir(os.path.join(t.path, entry["path"])) == ["keys-00000.parquet"]
     t.merge(
         spark.createDataFrame([(2, 21)], "k long, v int"),
         dedupe=False, mor=True,
@@ -774,22 +780,59 @@ def test_record_corrupt_matches_try_parse_json(spark, biz_items):
     assert _record_corrupt(biz_items) == want
 
 
-def test_check_add_spark_equivalent(spark, tmp_path):
-    """check_add_spark == prefilter_spark (membership before insert) +
-    add_spark (final bit state, fills, version) in ONE pass."""
+def _key_files(d: str) -> dict[str, bytes]:
+    out = {}
+    for root, _, fs in os.walk(d):
+        for f in fs:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), d)] = fh.read()
+    return out
+
+
+def test_gate_spark_equals_probe_add_and_value_counts(spark, tmp_path):
+    """gate_spark's one shard pass: its matched keys are the keys
+    prefilter_spark marks at the old version, the new version's bits equal
+    a local add of the same hashes, its duplicate keys equal an exact
+    value_counts, and a second pass over the same version (a task retry,
+    or an epoch re-run after a crash) writes byte-identical key files."""
+    import pandas as pd
+
+    def hashed(keys):
+        df = spark.createDataFrame([(k,) for k in keys], "key string")
+        return df.select("key", F.xxhash64("key").alias("_kh"))
+
+    base = [f"id{k}" for k in range(100, 200)]
+    batch = [f"id{k}" for k in list(range(150, 250)) + [160, 210, 210, 240]]
     a = BloomShards.create(str(tmp_path / "ba"), n_shards=4, m_bits=1 << 14, k=5)
     b = BloomShards.create(str(tmp_path / "bb"), n_shards=4, m_bits=1 << 14, k=5)
-    base = spark.createDataFrame([(k,) for k in range(100, 200)], "url_key long")
-    a.add_spark(base)
-    b.add_spark(base)
-    probe = spark.createDataFrame([(k,) for k in range(150, 250)], "url_key long")
-    exp = {r["url_key"]: r["maybe_seen"] for r in a.prefilter_spark(probe).collect()}
-    a.add_spark(probe)
-    gate = b.check_add_spark(probe)
-    got = {r["url_key"]: r["maybe_seen"] for r in gate.collect()}
-    gate.unpersist()
-    assert got == exp
-    assert a.current_version() == b.current_version()
-    all_keys = np.arange(100, 250)
-    assert bool(a.contains(all_keys).all()) and bool(b.contains(all_keys).all())
+    for bf in (a, b):
+        bf.add_spark(hashed(base), "_kh")
+    exp = {
+        r["key"]
+        for r in b.prefilter_spark(hashed(sorted(set(batch))), "_kh").collect()
+        if r["maybe_seen"]
+    }
+    a.add(np.array([r["_kh"] for r in hashed(batch).collect()], dtype=np.int64))
+
+    out = str(tmp_path / "gate")
+    gate = b.gate_spark(spark.createDataFrame([(k,) for k in batch], "key string"), "key", out)
+    files = _key_files(out)
+    assert not [f for f in files if os.path.basename(f).startswith(".")]
+    keys = {
+        sub: {r["key"] for r in spark.read.parquet(os.path.join(out, sub)).collect()}
+        for sub in ("matched", "dups")
+    }
+    assert keys["matched"] == exp and len(exp) >= 50
+    vc = pd.Series(batch).value_counts()
+    assert keys["dups"] == set(vc.index[vc > 1]) == {"id160", "id210", "id240"}
+    assert {os.path.join(out, f) for f in files} == set(gate["matched"] + gate["dups"])
+    assert gate["n_matched"] == len(exp) and gate["n_dup"] == 3
+    assert gate["n_distinct"] == len(set(batch))
+    assert a.current_version() == b.current_version() == 2
+    for s in range(4):
+        assert np.array_equal(np.load(a._shard_file(2, s)), np.load(b._shard_file(2, s)))
     assert abs(a.fill_ratio() - b.fill_ratio()) < 1e-12
+
+    b._write_pointer(b.path, 1)  # re-run the pass over the same version
+    b.gate_spark(spark.createDataFrame([(k,) for k in reversed(batch)], "key string"), "key", out)
+    assert _key_files(out) == files
